@@ -580,7 +580,7 @@ object MultimodalOps {
     * rebuilds (string split included) re-evaluate per element access,
     * which turned the 8×8 DCT into combinatorial work (observed: one
     * task pinned for 13+ min at sf0.01 before this binding). */
-  private def bindOnce(value: org.apache.spark.sql.Column)(
+  private[graft] def bindOnce(value: org.apache.spark.sql.Column)(
       body: org.apache.spark.sql.Column => org.apache.spark.sql.Column) =
     element_at(transform(array(value), body), 1)
 
@@ -594,7 +594,7 @@ object MultimodalOps {
     * mm_pgm_decode 7.0 → 3.1 s from this barrier alone). [[bindOnce]]
     * can't help at the top level because the final SELECT's columns are
     * separate expression trees. */
-  private def evalOnce(df: DataFrame, key: org.apache.spark.sql.Column,
+  private[graft] def evalOnce(df: DataFrame, key: org.apache.spark.sql.Column,
       s: org.apache.spark.sql.Column): DataFrame =
     df.select(key, explode(array(s)).as("o"))
 
@@ -766,6 +766,21 @@ object MultimodalOps {
       .select($"doc_a", $"doc_b", $"hamming")
   }
 
+  // ------------------------------------ synthesized payloads: input seam
+
+  /** The input every synthesized-payload builder (PGM, WAV, RLE, Huffman,
+    * LZ) starts from: the documents with non-empty text, range-partitioned
+    * on `doc_id`. This is the ONE exchange of each lane built on them —
+    * the final `orderBy($"doc_id"[, $"win_id"])` finds its ordered
+    * distribution already satisfied and plans a local sort only. Because
+    * the exchange carries the narrow `(doc_id, text)` input rather than
+    * the decoded output, the range partitioner's sampling job reads just
+    * the scan, and the payload build and decode run once, downstream of
+    * it. No partition count: AQE sizes the exchange from the observed
+    * bytes — one partition for a sub-MiB corpus, wide at scale. */
+  private def payloadDocs(docs: DataFrame): DataFrame =
+    docs.filter(length($"text") > 0).repartitionByRange($"doc_id")
+
   // ------------------------------------------------ real binary format: PGM
 
   /** Header pattern of a binary PGM (netpbm "P5"): magic, width, height,
@@ -779,14 +794,14 @@ object MultimodalOps {
     * (`32 + (ascii(text[k mod n])·31 + k) mod 96`, values 32..127 so
     * ASCII ⇒ chars ≡ bytes on both engines), dims from doc_id
     * (w ∈ {16,24,32}, h ∈ {16,24} — multiples of 8 so the 8×8 downsample
-    * block-tiles exactly). Construction is map-only; a production
-    * pipeline reads these bytes from object storage instead — the decode
-    * path below is identical either way. */
+    * block-tiles exactly). Construction is map-only downstream of the
+    * [[payloadDocs]] range exchange; a production pipeline reads these
+    * bytes from object storage instead — the decode path below is
+    * identical either way. */
   private[graft] def pgmPayloadOf(docs: DataFrame): DataFrame = {
-    val asciiF = org.apache.spark.sql.functions.ascii _
     val w = lit(16L) + ($"doc_id" % 3) * 8L
     val h = lit(16L) + ($"doc_id" % 2) * 8L
-    docs.filter(length($"text") > 0).select($"doc_id",
+    payloadDocs(docs).select($"doc_id",
       encode(concat(
         lit("P5\n"), w.cast("string"), lit(" "), h.cast("string"), lit("\n127\n"),
         // round-17: split text ONCE into a lambda-bound ascii-code array —
@@ -839,8 +854,9 @@ object MultimodalOps {
     * (length + luma sum proves the full raster was read through the
     * parser). The real-codec twin of [[decodeHeaders]]' BMP/WAV header
     * reads, now with the pixel payload itself exercised end-to-end.
-    * Map-only at any scale; a malformed payload parses to NULL fields
-    * (skip-malformed convention), pinned by the spec. */
+    * Map-only after the one [[payloadDocs]] exchange, which carries the
+    * document text, never the payload; a malformed payload parses to NULL
+    * fields (skip-malformed convention), pinned by the spec. */
   val pgmDecode: QueryDef = QueryDef(
     "mm_pgm_decode",
     s"""WITH $pgmPaySql
@@ -855,7 +871,6 @@ object MultimodalOps {
 
   /** [[pgmDecode]] over any `(doc_id, payload)` frame — fixture seam. */
   private[graft] def pgmDecodeOf(media: DataFrame): DataFrame = {
-    val asciiF = org.apache.spark.sql.functions.ascii _
     val s = decode($"payload", "UTF-8")
     val out = bindOnce(struct(
       regexp_extract(s, "^(P5\\n\\d+ \\d+\\n\\d+\\n)", 1).as("hdr"),
@@ -890,8 +905,8 @@ object MultimodalOps {
     * transform as [[phash]]. This closes the round-13 verdict's
     * multimodal gap: the lane decodes an actual binary image format
     * end-to-end — swap the synthetic PGM bytes for stored assets and
-    * nothing downstream changes. Map-only; the payload never crosses a
-    * shuffle. */
+    * nothing downstream changes. Map-only after the one [[payloadDocs]]
+    * exchange of the document text; the payload never crosses a shuffle. */
   val phashPgm: QueryDef = QueryDef(
     "mm_phash_pgm",
     s"""WITH $pgmPaySql,
@@ -949,7 +964,6 @@ object MultimodalOps {
   private[graft] def phashPgmHofOf(media: DataFrame,
       hashFn: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
         dctHash): DataFrame = {
-    val asciiF = org.apache.spark.sql.functions.ascii _
     val s = decode($"payload", "UTF-8")
     val hash = bindOnce(struct(
       regexp_extract(s, "^(P5\\n\\d+ \\d+\\n\\d+\\n)", 1).as("hdr"),
@@ -1081,13 +1095,13 @@ object MultimodalOps {
     * two's-complement negatives). Canonical 44-byte RIFF/WAVE/fmt/data
     * header via [[leBytes]], then n = 64 + (doc_id mod 3)·32 samples,
     * s(k) = ((ascii(text[k mod len]) · 131 + k · 17 + doc_id) mod 4001)
-    * − 2000, each serialized as little-endian two's complement. Map-only;
-    * a production pipeline reads these bytes from object storage — the
-    * decode path below is identical either way. */
+    * − 2000, each serialized as little-endian two's complement. Map-only
+    * downstream of the [[payloadDocs]] range exchange; a production
+    * pipeline reads these bytes from object storage — the decode path
+    * below is identical either way. */
   private[graft] def wavPcmPayloadOf(docs: DataFrame): DataFrame = {
-    val asciiF = org.apache.spark.sql.functions.ascii _
     val n = lit(64L) + ($"doc_id" % 3L) * 32L
-    docs.filter(length($"text") > 0).select($"doc_id",
+    payloadDocs(docs).select($"doc_id",
       concat(
         ascii("RIFF"), leBytes(lit(36L) + n * 2L, 4), ascii("WAVE"),
         ascii("fmt "), leBytes(lit(16), 4),
@@ -1124,7 +1138,9 @@ object MultimodalOps {
     * binary audio format end-to-end. Samples are decoded ONCE into a
     * lambda-bound array (the [[dctHash]] staged-collapse lesson); windows
     * are emitted as precomputed structs so the explode re-evaluates
-    * nothing. Map-only at any scale; a malformed payload yields no rows
+    * nothing. Map-only after the one [[payloadDocs]] exchange of the
+    * document text, whose `doc_id` ranges leave the final
+    * `(doc_id, win_id)` sort local; a malformed payload yields no rows
     * (skip-malformed convention, spec-pinned).
     *
     * The oracle derives the identical windows ARITHMETICALLY from the
@@ -1211,9 +1227,9 @@ object MultimodalOps {
     * window, the count of adjacent sign flips (0 counts as non-negative —
     * an exact integer rule, no float epsilon to diverge on) plus the
     * combined `voiced` flag (peak ≥ [[PeakVoicedMin]] AND zcr ≤
-    * [[ZcrVoicedMax]]). Same real byte-parse path as [[wavEnergy]];
-    * map-only at any scale; the oracle re-derives the samples
-    * arithmetically ([[decodeMeta]] convention). */
+    * [[ZcrVoicedMax]]). Same real byte-parse path as [[wavEnergy]], and
+    * the same single [[payloadDocs]] exchange under it; the oracle
+    * re-derives the samples arithmetically ([[decodeMeta]] convention). */
   val wavZcr: QueryDef = QueryDef(
     "mm_wav_zcr",
     s"""WITH raw AS (SELECT doc_id, text, length(text) AS ln,
@@ -1323,8 +1339,7 @@ object MultimodalOps {
     rlePayloadOf(docs, rleTokDivOf(docs))
 
   private[graft] def rlePayloadOf(docs: DataFrame, div: DataFrame): DataFrame = {
-    val asciiF = org.apache.spark.sql.functions.ascii _
-    docs.filter(length($"text") > 0)
+    payloadDocs(docs)
       .crossJoin(broadcast(div))
       .select($"doc_id",
       encode(concat(lit("RL1\n"),
@@ -1407,8 +1422,10 @@ object MultimodalOps {
     * walks the self-delimiting token stream and reports run counts,
     * expanded pixel count, luma sum, and an `ok` flag proving the stream
     * was consumed EXACTLY (no dangling control, no partial run, no
-    * out-of-range byte). Map-only at any scale: the fold is one codegen'd
-    * higher-order aggregate per row; the payload never crosses a shuffle.
+    * out-of-range byte). The decode is map-only: its one exchange is the
+    * [[payloadDocs]] range shuffle of the document text under the payload
+    * build, so the range sampler never builds or decodes a payload and the
+    * final sort is local; the payload never crosses a shuffle.
     *
     * The oracle is GENERATOR-SIDE: it never parses — it computes the
     * expected readout in closed form from the construction formulas, so
@@ -1449,8 +1466,9 @@ object MultimodalOps {
   /** [[rleDecode]] over any `(doc_id, payload)` frame — fixture seam.
     * Round-17: the token automaton runs as the native `rle_stream_decode`
     * expression (one code-point pass) instead of the interpreted per-char
-    * struct-state fold; [[rleDecodeHofOf]] keeps the fold verbatim as the
-    * A/B witness (spec-pinned on corpus + malformed fixtures). */
+    * struct-state fold; the test-side `DecodeWitnesses.rleDecodeHofOf`
+    * keeps the fold verbatim as the A/B witness (spec-pinned on corpus +
+    * malformed fixtures). */
   private[graft] def rleDecodeOf(media: DataFrame): DataFrame =
     evalOnce(media, $"doc_id",
       call_function("rle_stream_decode", decode($"payload", "UTF-8")))
@@ -1458,52 +1476,6 @@ object MultimodalOps {
         $"o.lit_runs".as("lit_runs"), $"o.rep_runs".as("rep_runs"),
         $"o.n_pixels".as("n_pixels"), $"o.luma_sum".as("luma_sum"),
         $"o.ok".as("ok"))
-
-  /** The pre-round-17 higher-order-function automaton — A/B witness. */
-  private[graft] def rleDecodeHofOf(media: DataFrame): DataFrame = {
-    val asciiF = org.apache.spark.sql.functions.ascii _
-    val out = bindOnce(decode($"payload", "UTF-8")) { ss =>
-      val zero = struct(lit(0L).as("lit_rem"), lit(0L).as("pend"),
-        lit(0L).as("px"), lit(0L).as("luma"),
-        lit(0L).as("litr"), lit(0L).as("repr"), lit(0L).as("bad"))
-      import org.apache.spark.sql.Column
-      def next(a: Column, litRem: Column, pend: Column, px: Column,
-          luma: Column, litr: Column, repr: Column, bad: Column) =
-        struct(litRem.as("lit_rem"), pend.as("pend"), px.as("px"),
-          luma.as("luma"), litr.as("litr"), repr.as("repr"), bad.as("bad"))
-      // round-17: fold over the native code array — ascii_codes yields
-      // exactly the per-char codes the split+ascii form produced, with
-      // no zero-width artifacts and no per-char string allocation
-      val fin = aggregate(
-        call_function("ascii_codes", ss.substr(lit(5), length(ss))),
-        zero,
-        (a, b) => {
-          val (lr, pd) = (a.getField("lit_rem"), a.getField("pend"))
-          val (px, lm) = (a.getField("px"), a.getField("luma"))
-          val (ltr, rpr, bd) =
-            (a.getField("litr"), a.getField("repr"), a.getField("bad"))
-          when(pd > 0L, next(a, lr, lit(0L), px + pd, lm + pd * b, ltr, rpr, bd))
-            .when(lr > 0L, next(a, lr - 1L, pd, px + 1L, lm + b, ltr, rpr, bd))
-            .when(b >= 1L && b <= 63L, next(a, b, pd, px, lm, ltr + 1L, rpr, bd))
-            .when(b >= 64L && b <= 127L,
-              next(a, lr, b - 62L, px, lm, ltr, rpr + 1L, bd))
-            .otherwise(next(a, lr, pd, px, lm, ltr, rpr, lit(1L)))
-        })
-      struct(length(ss).cast("long").as("n_bytes"),
-        fin.getField("litr").as("lit_runs"),
-        fin.getField("repr").as("rep_runs"),
-        fin.getField("px").as("n_pixels"),
-        fin.getField("luma").as("luma_sum"),
-        when(ss.substr(lit(1), lit(4)) === "RL1\n" &&
-          fin.getField("lit_rem") === 0L && fin.getField("pend") === 0L &&
-          fin.getField("bad") === 0L, 1L).otherwise(0L).as("ok"))
-    }
-    evalOnce(media, $"doc_id", out)
-      .select($"doc_id", $"o.n_bytes".as("n_bytes"),
-        $"o.lit_runs".as("lit_runs"), $"o.rep_runs".as("rep_runs"),
-        $"o.n_pixels".as("n_pixels"), $"o.luma_sum".as("luma_sum"),
-        $"o.ok".as("ok"))
-  }
 
   /** Deterministic canonical-Huffman payload per document — the FOURTH
     * binary container family (round-15 verdict widening item 4): PGM is
@@ -1533,8 +1505,7 @@ object MultimodalOps {
     huffPayloadOf(docs, rleTokDivOf(docs))
 
   private[graft] def huffPayloadOf(docs: DataFrame, div: DataFrame): DataFrame = {
-    val asciiF = org.apache.spark.sql.functions.ascii _
-    docs.filter(length($"text") > 0)
+    payloadDocs(docs)
       .crossJoin(broadcast(div))
       .select($"doc_id",
       encode(concat(lit("HF1\n"),
@@ -1581,8 +1552,10 @@ object MultimodalOps {
     * decoded, value/position-weighted sums, code bits consumed, bad
     * flag) walks the prefix-free code: a 0 terminates a code of symbol
     * = ones-run length, the seventh consecutive 1 completes symbol 7,
-    * pad bits after the m-th symbol must all be 1. Map-only at any
-    * scale; the payload never crosses a shuffle.
+    * pad bits after the m-th symbol must all be 1. Map-only after the one
+    * [[payloadDocs]] exchange of the document text (the range sampler
+    * reads only the scan, the final sort is local); the payload never
+    * crosses a shuffle.
     *
     * The oracle is GENERATOR-SIDE closed form (the [[rleDecode]]
     * discipline): it never touches the bitstream — symbol values, code
@@ -1615,143 +1588,18 @@ object MultimodalOps {
     huffDecodeOf(huffMediaTable(spark, dir)).orderBy($"doc_id")
   }
 
-  /** Per-(carry, char) Huffman transition tables — the canonical-table
-    * decode every production inflater uses: for entry ones-run o ∈ [0,6]
-    * and 6-bit char value u, simulate the six bits MSB-first once at
-    * BUILD time and record (codes emitted e, Σ symbol values sv, Σ
-    * local-index-weighted values sw, Σ full code lengths bt — a code's
-    * length includes ones carried in from earlier chars, so summing bt
-    * over chars is exactly Σ len over codes however they straddle — and
-    * exit ones-run o2). The position-weighted checksum decomposes as
-    * wsum += dec·sv + sw, so one table step replaces six interpreted
-    * bit-steps (round-16: the bit-wise fold cost 154.9 s at sf10; the
-    * table form is the same automaton batched per char). */
-  private val huffTables: (Array[Long], Array[Long], Array[Long],
-      Array[Long], Array[Long]) = {
-    val n = 7 * 64
-    val (e, sv, sw, bt, o2) = (new Array[Long](n), new Array[Long](n),
-      new Array[Long](n), new Array[Long](n), new Array[Long](n))
-    for (o <- 0 to 6; u <- 0 until 64) {
-      var ones = o.toLong; var cnt = 0L; var vs = 0L; var ws = 0L
-      var bits = 0L
-      for (i <- 5 to 0 by -1) {
-        if (((u >> i) & 1) == 1) {
-          ones += 1
-          if (ones == 7) { cnt += 1; vs += 7; ws += cnt * 7; bits += 7
-            ones = 0 }
-        } else { cnt += 1; vs += ones; ws += cnt * ones; bits += ones + 1
-          ones = 0 }
-      }
-      val k = o * 64 + u
-      e(k) = cnt; sv(k) = vs; sw(k) = ws; bt(k) = bits; o2(k) = ones
-    }
-    (e, sv, sw, bt, o2)
-  }
-
   /** [[huffDecode]] over any `(doc_id, payload)` frame — fixture seam.
     * Round-17: runs as the native `huff_stream_decode` bit automaton
     * (see that expression's equivalence argument to the transition-table
-    * fold); [[huffDecodeHofOf]] keeps the table-driven fold verbatim as
-    * the A/B witness (spec-pinned on corpus + malformed fixtures). */
+    * fold); the test-side `DecodeWitnesses.huffDecodeHofOf` keeps the
+    * table-driven fold verbatim as the A/B witness (spec-pinned on corpus
+    * + malformed fixtures). */
   private[graft] def huffDecodeOf(media: DataFrame): DataFrame =
     evalOnce(media, $"doc_id",
       call_function("huff_stream_decode", decode($"payload", "UTF-8")))
       .select($"doc_id", $"o.n_bytes".as("n_bytes"),
         $"o.n_syms".as("n_syms"), $"o.value_sum".as("value_sum"),
         $"o.wsum".as("wsum"), $"o.bit_len".as("bit_len"), $"o.ok".as("ok"))
-
-  /** The pre-round-17 table-driven fold — A/B witness. */
-  private[graft] def huffDecodeHofOf(media: DataFrame): DataFrame = {
-    val asciiF = org.apache.spark.sql.functions.ascii _
-    val (eLit, svLit, swLit, btLit, o2Lit) = (
-      array(huffTables._1.map(lit): _*), array(huffTables._2.map(lit): _*),
-      array(huffTables._3.map(lit): _*), array(huffTables._4.map(lit): _*),
-      array(huffTables._5.map(lit): _*))
-    val out = bindOnce(decode($"payload", "UTF-8")) { ss =>
-      bindOnce((asciiF(ss.substr(lit(5), lit(1))).cast("long") - 32L) * 64L
-          + asciiF(ss.substr(lit(6), lit(1))).cast("long") - 32L) { m =>
-        import org.apache.spark.sql.Column
-        def st(o: Column, d: Column, v: Column, w: Column, bt: Column,
-            bd: Column) =
-          struct(o.as("ones"), d.as("dec"), v.as("vsum"), w.as("wsum"),
-            bt.as("bits"), bd.as("bad"))
-        val zero = st(lit(0L), lit(0L), lit(0L), lit(0L), lit(0L), lit(0L))
-        def step(s: Column, b: Column): Column = {
-          val (ones, dec) = (s.getField("ones"), s.getField("dec"))
-          val (vsum, wsum) = (s.getField("vsum"), s.getField("wsum"))
-          val (bits, bad) = (s.getField("bits"), s.getField("bad"))
-          when(dec >= m, // padding zone: every pad bit must be 1
-            st(ones, dec, vsum, wsum, bits,
-              when(b === 0L, lit(1L)).otherwise(bad)))
-            .when(b === 1L && ones === 6L, // seventh 1 completes symbol 7
-              st(lit(0L), dec + 1L, vsum + 7L, wsum + (dec + 1L) * 7L,
-                bits + 7L, bad))
-            .when(b === 1L, st(ones + 1L, dec, vsum, wsum, bits, bad))
-            .otherwise( // a 0 terminates: symbol = ones-run length
-              st(lit(0L), dec + 1L, vsum + ones, wsum + (dec + 1L) * ones,
-                bits + ones + 1L, bad))
-        }
-        // round-17: fold over the native code array (see rleDecodeOf)
-        val fin = aggregate(
-          call_function("ascii_codes", ss.substr(lit(7), length(ss))),
-          zero,
-          (a, b) => bindOnce(b - 32L) { u =>
-            val (ones, dec) = (a.getField("ones"), a.getField("dec"))
-            val (vsum, wsum) = (a.getField("vsum"), a.getField("wsum"))
-            val (bits, bad) = (a.getField("bits"), a.getField("bad"))
-            // out-of-alphabet char: flag and skip (ok can never recover)
-            when(u < 0L || u > 63L, st(ones, dec, vsum, wsum, bits, lit(1L)))
-              // pure padding char after the m-th code: all six bits must
-              // be 1 — identical to six bit-steps in the padding zone
-              .when(dec >= m, st(ones, dec, vsum, wsum, bits,
-                when(u =!= 63L, lit(1L)).otherwise(bad)))
-              .otherwise(bindOnce(ones * 64L + u + 1L) { idx =>
-                bindOnce(element_at(eLit, idx.cast("int"))) { eC =>
-                  // fast path: every code this char completes lands at or
-                  // before the m-th — one table step. If the char ends
-                  // EXACTLY at m, any leftover ones are legal padding
-                  // (a 0 among them would have emitted another code and
-                  // pushed dec+e past m), so the carry resets.
-                  when(dec + eC <= m,
-                    st(when(dec + eC === m, lit(0L))
-                        .otherwise(element_at(o2Lit, idx.cast("int"))),
-                      dec + eC,
-                      vsum + element_at(svLit, idx.cast("int")),
-                      wsum + dec * element_at(svLit, idx.cast("int"))
-                        + element_at(swLit, idx.cast("int")),
-                      bits + element_at(btLit, idx.cast("int")), bad))
-                    // boundary/malformed: codes would cross the m-th
-                    // mid-char — walk this one char bit-wise
-                    .otherwise((0 to 5).foldLeft(a: Column) { (s, i) =>
-                      bindOnce(s)(sb =>
-                        step(sb, shiftright(u, 5 - i).bitwiseAND(lit(1L))))
-                    })
-                }
-              })
-          })
-        struct(length(ss).cast("long").as("n_bytes"),
-          fin.getField("dec").as("n_syms"),
-          fin.getField("vsum").as("value_sum"),
-          fin.getField("wsum").as("wsum"),
-          fin.getField("bits").as("bit_len"),
-          // round-16 ADVICE: the padding-zone bit check (every pad bit
-          // is 1) cannot see EXTRA all-ones chars appended past the one
-          // legal padded boundary char — the packed-length identity
-          // (bytes = 6 header + ceil(code bits / 6)) is what rejects
-          // them, so it is part of ok, not just a spec-side assert.
-          when(ss.substr(lit(1), lit(4)) === "HF1\n" &&
-            fin.getField("dec") === m && fin.getField("ones") === 0L &&
-            fin.getField("bad") === 0L &&
-            length(ss).cast("long") === lit(6L) +
-              floor((fin.getField("bits") + 5L) / lit(6L)).cast("long"),
-            1L).otherwise(0L).as("ok"))
-      }
-    }
-    evalOnce(media, $"doc_id", out)
-      .select($"doc_id", $"o.n_bytes".as("n_bytes"),
-        $"o.n_syms".as("n_syms"), $"o.value_sum".as("value_sum"),
-        $"o.wsum".as("wsum"), $"o.bit_len".as("bit_len"), $"o.ok".as("ok"))
-  }
 
   // ------------------------- real binary format: LZ77 back-references
 
@@ -1787,10 +1635,9 @@ object MultimodalOps {
     * oracle-mirrored), so payload volume stays in a constant band;
     * every driver SF sits at the q = 1 floor, bit-identical. */
   private[graft] def lzPayloadOf(docs: DataFrame, div: DataFrame): DataFrame = {
-    val asciiF = org.apache.spark.sql.functions.ascii _
     def chrOf(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       call_function("chr", c)
-    docs.filter(length($"text") > 0)
+    payloadDocs(docs)
       .crossJoin(broadcast(div))
       .select($"doc_id",
         // round-17: split-once ascii codes (see pgmPayloadOf)
@@ -1858,9 +1705,10 @@ object MultimodalOps {
     * grows, which is exactly the overlap semantics: dist=1 duplicates
     * the last byte len times). Distances are bounds-checked against the
     * CURRENT output length, so a reference past the start of history is
-    * malformed, not a crash. Map-only at any scale: output per doc is
-    * ladder-bounded (≤ ~400 bytes at the q=1 floor, shrinking with q),
-    * and the payload never crosses a shuffle.
+    * malformed, not a crash. Map-only after the one [[payloadDocs]]
+    * exchange of the document text: output per doc is ladder-bounded
+    * (≤ ~400 bytes at the q=1 floor, shrinking with q), the range sampler
+    * reads only the scan, and the payload never crosses a shuffle.
     *
     * The oracle is GENERATOR-SIDE closed form (the [[rleDecode]]
     * discipline): it never parses — token/copy counts, output length,
@@ -1926,9 +1774,10 @@ object MultimodalOps {
     * expression (one code-point pass, int output buffer) instead of the
     * per-char `aggregate` fold whose state carried the output buffer as
     * a string — O(output) per row instead of O(output²) allocation
-    * churn. [[lzDecodeHofOf]] keeps the fold verbatim as the A/B witness
-    * (the HilbertKey native-equals-fold discipline; the spec pins both
-    * on the generated corpus and the hand-packed malformed fixtures). */
+    * churn. The test-side `DecodeWitnesses.lzDecodeHofOf` keeps the fold
+    * verbatim as the A/B witness (the HilbertKey native-equals-fold
+    * discipline; the spec pins both on the generated corpus and the
+    * hand-packed malformed fixtures). */
   private[graft] def lzDecodeOf(media: DataFrame): DataFrame =
     evalOnce(media, $"doc_id",
       call_function("lz_stream_decode", decode($"payload", "UTF-8")))
@@ -1936,92 +1785,6 @@ object MultimodalOps {
         $"o.n_toks".as("n_toks"), $"o.n_copies".as("n_copies"),
         $"o.out_len".as("out_len"), $"o.value_sum".as("value_sum"),
         $"o.wsum".as("wsum"), $"o.ok".as("ok"))
-
-  /** The pre-round-17 higher-order-function automaton — A/B witness. */
-  private[graft] def lzDecodeHofOf(media: DataFrame): DataFrame = {
-    val asciiF = org.apache.spark.sql.functions.ascii _
-    val out = bindOnce(decode($"payload", "UTF-8")) { ss =>
-      bindOnce((asciiF(ss.substr(lit(5), lit(1))).cast("long") - 32L) * 64L
-          + asciiF(ss.substr(lit(6), lit(1))).cast("long") - 32L) { tT =>
-        import org.apache.spark.sql.Column
-        // parser modes: 0 expect tag, 1 expect literal value, 2 expect
-        // copy length, 3 expect dist-hi, 4 expect dist-lo
-        def st(md: Column, pl: Column, ph: Column, tk: Column, cp: Column,
-            o: Column, bad: Column) =
-          struct(md.as("md"), pl.as("pl"), ph.as("ph"), tk.as("tk"),
-            cp.as("cp"), o.as("o"), bad.as("bad"))
-        val zero = st(lit(0L), lit(0L), lit(0L), lit(0L), lit(0L),
-          lit(""), lit(0L))
-        val fin = aggregate(
-          filter(split(ss.substr(lit(7), length(ss)), ""),
-            ch => length(ch) > 0),
-          zero,
-          (a, ch) => bindOnce(asciiF(ch).cast("long")) { b =>
-            val (md, pl, ph) = (a.getField("md"), a.getField("pl"),
-              a.getField("ph"))
-            val (tk, cp, o, bad) = (a.getField("tk"), a.getField("cp"),
-              a.getField("o"), a.getField("bad"))
-            when(md === 0L,
-              when(ch === "L", st(lit(1L), pl, ph, tk, cp, o, bad))
-                .when(ch === "C", st(lit(2L), pl, ph, tk, cp, o, bad))
-                .otherwise(st(lit(0L), pl, ph, tk, cp, o, lit(1L))))
-              .when(md === 1L, // literal value byte appends to history
-                st(lit(0L), pl, ph, tk + 1L, cp, concat(o, ch),
-                  when(b < 32L, lit(1L)).otherwise(bad)))
-              .when(md === 2L, // copy length: chr(32+l), l in [1,63]
-                st(lit(3L), b - 32L, ph, tk, cp, o,
-                  when(b <= 32L || b > 95L, lit(1L)).otherwise(bad)))
-              .when(md === 3L, // dist hi 6 bits
-                st(lit(4L), pl, b - 32L, tk, cp, o,
-                  when(b < 32L || b > 95L, lit(1L)).otherwise(bad)))
-              .otherwise( // dist lo: resolve and apply the copy
-                bindOnce(ph * 64L + b - 32L) { dist =>
-                  when(b >= 32L && b <= 95L && dist >= 1L &&
-                      dist <= length(o).cast("long") && pl >= 1L,
-                    st(lit(0L), lit(0L), lit(0L), tk + 1L, cp + 1L,
-                      // byte-by-byte: the source index is computed from
-                      // the GROWING buffer each step, so dist < len
-                      // self-extends exactly like a real inflater
-                      aggregate(sequence(lit(1L), pl), o,
-                        (oo, _) => concat(oo, oo.substr(
-                          (length(oo).cast("long") - dist + 1L)
-                            .cast("int"), lit(1)))),
-                      bad))
-                    .otherwise( // distance past start / zero len: flag,
-                      // skip the copy, keep walking tokens
-                      st(lit(0L), lit(0L), lit(0L), tk + 1L, cp + 1L, o,
-                        lit(1L)))
-                })
-          })
-        bindOnce(fin.getField("o")) { ostr =>
-          // round-17: fold the readout sums over the native code array
-          bindOnce(aggregate(
-            call_function("ascii_codes", ostr),
-            struct(lit(0L).as("i"), lit(0L).as("vs"), lit(0L).as("ws")),
-            (a, b) =>
-              struct((a.getField("i") + 1L).as("i"),
-                (a.getField("vs") + b).as("vs"),
-                (a.getField("ws") + (a.getField("i") + 1L) * b).as("ws"))
-            )) { vf =>
-            struct(length(ss).cast("long").as("n_bytes"),
-              fin.getField("tk").as("n_toks"),
-              fin.getField("cp").as("n_copies"),
-              length(ostr).cast("long").as("out_len"),
-              vf.getField("vs").as("value_sum"),
-              vf.getField("ws").as("wsum"),
-              when(ss.substr(lit(1), lit(4)) === "LZ1\n" &&
-                fin.getField("md") === 0L && fin.getField("tk") === tT &&
-                fin.getField("bad") === 0L, 1L).otherwise(0L).as("ok"))
-          }
-        }
-      }
-    }
-    evalOnce(media, $"doc_id", out)
-      .select($"doc_id", $"o.n_bytes".as("n_bytes"),
-        $"o.n_toks".as("n_toks"), $"o.n_copies".as("n_copies"),
-        $"o.out_len".as("out_len"), $"o.value_sum".as("value_sum"),
-        $"o.wsum".as("wsum"), $"o.ok".as("ok"))
-  }
 
   val all: Seq[QueryDef] =
     Seq(bytesStats, metaFilter, frameSample, decodeMeta, features,

@@ -605,12 +605,12 @@ class MultimodalOpsSpec extends AnyFunSuite {
     def rowsOf(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
     for ((media, nat, hof) <- Seq(
-      (rleFix, MultimodalOps.rleDecodeOf _, MultimodalOps.rleDecodeHofOf _),
+      (rleFix, MultimodalOps.rleDecodeOf _, DecodeWitnesses.rleDecodeHofOf _),
       (MultimodalOps.rleMediaTable(spark, sf),
-        MultimodalOps.rleDecodeOf _, MultimodalOps.rleDecodeHofOf _),
-      (huffFix, MultimodalOps.huffDecodeOf _, MultimodalOps.huffDecodeHofOf _),
+        MultimodalOps.rleDecodeOf _, DecodeWitnesses.rleDecodeHofOf _),
+      (huffFix, MultimodalOps.huffDecodeOf _, DecodeWitnesses.huffDecodeHofOf _),
       (MultimodalOps.huffMediaTable(spark, sf),
-        MultimodalOps.huffDecodeOf _, MultimodalOps.huffDecodeHofOf _))) {
+        MultimodalOps.huffDecodeOf _, DecodeWitnesses.huffDecodeHofOf _))) {
       val n = rowsOf(nat(media))
       val h = rowsOf(hof(media))
       assert(n.keySet == h.keySet)
@@ -649,7 +649,7 @@ class MultimodalOpsSpec extends AnyFunSuite {
     for (media <- Seq(fixtures, corpus)) {
       val nat = MultimodalOps.lzDecodeOf(media).collect()
         .map(r => r.getLong(0) -> r.toSeq.tail).toMap
-      val hof = MultimodalOps.lzDecodeHofOf(media).collect()
+      val hof = DecodeWitnesses.lzDecodeHofOf(media).collect()
         .map(r => r.getLong(0) -> r.toSeq.tail).toMap
       assert(nat.keySet == hof.keySet)
       nat.keys.foreach(id => assert(nat(id) == hof(id),

@@ -1,5 +1,8 @@
 package graft
 
+import scala.util.{Failure, Success, Try}
+
+import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,16 +15,39 @@ class PlanAuditSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
-  private lazy val plans: Map[String, String] =
+  /** One lane's plans: the physical plan's text and the number of
+    * unpartitioned windows in its optimized plan. */
+  private case class Planned(physical: String, globalWindows: Int)
+
+  /** Every registered lane, built and planned ONCE. A lane whose build or
+    * planning throws keeps its error here, so it fails only "every
+    * registered query resolves and plans without error" (by name), and
+    * the other registry sweeps run over the lanes that did plan. */
+  private lazy val sweep: Map[String, Try[Planned]] =
     SparkEntry.queries.map { case (name, fn) =>
-      name -> fn(spark, sf).queryExecution.executedPlan.toString
+      name -> Try {
+        val qe = fn(spark, sf).queryExecution
+        Planned(qe.executedPlan.toString, qe.optimizedPlan.collect {
+          case w: LWindow if w.partitionSpec.isEmpty => w
+        }.size)
+      }
     }
+
+  /** Physical plan text of every lane that planned. */
+  private lazy val plans: Map[String, String] =
+    sweep.collect { case (n, Success(p)) => n -> p.physical }
+
+  /** A named lane's physical plan; fails naming the lane if it did not plan. */
+  private def plan(name: String): String = sweep(name) match {
+    case Success(p) => p.physical
+    case Failure(e) => fail(s"$name did not plan: $e")
+  }
 
   test("round-12 map-only generators shuffle nothing but their output sort") {
     // llm_span_corruption is pure per-row array algebra: the ONLY exchange
     // in its physical plan must be the final ORDER BY's range partitioning
     // — any extra shuffle means the generator stopped being map-only
-    val span = plans("llm_span_corruption")
+    val span = plan("llm_span_corruption")
     val exchanges = "Exchange ".r.findAllIn(span).size
     assert(exchanges <= 1, s"llm_span_corruption plans $exchanges exchanges")
     assert(!span.contains("SinglePartition"),
@@ -29,7 +55,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // geo_tile_heatmap: map-side tile derivation, one bounded (zoom, tile)
     // aggregate, one output sort — partial aggregation must survive so the
     // shuffle carries tile counts, not points
-    val tile = plans("geo_tile_heatmap")
+    val tile = plan("geo_tile_heatmap")
     assert(!tile.contains("SinglePartition"),
       "geo_tile_heatmap degraded to a single partition")
     assert(tile.contains("partial_count"),
@@ -48,7 +74,7 @@ class PlanAuditSpec extends AnyFunSuite {
       "a5_top10_leaderboard", "sql_top_orders", "llm_bm25_rank",
       "graph_pagerank", "llm_weighted_sample")
     topK.foreach { n =>
-      assert(plans(n).contains("TakeOrderedAndProject"),
+      assert(plan(n).contains("TakeOrderedAndProject"),
         s"$n lost its top-k plan")
     }
   }
@@ -61,11 +87,11 @@ class PlanAuditSpec extends AnyFunSuite {
     Seq("llm_pq_encode", "llm_pq_adc", "llm_pq_ivf_adc", "llm_pq_recall",
       "llm_mix_resample", "llm_curriculum", "llm_incremental_dedup",
       "llm_ann_ndcg", "mm_crossmodal_fetch", "stream_psi").foreach { n =>
-      assert(plans(n).contains("Broadcast"), s"$n lost its broadcast")
+      assert(plan(n).contains("Broadcast"), s"$n lost its broadcast")
     }
     // the per-doc span merge must stay partitioned by doc_id — a global
     // window here would serialize the whole gram stream
-    assert(!plans("llm_dup_spans").contains("SinglePartition"),
+    assert(!plan("llm_dup_spans").contains("SinglePartition"),
       "llm_dup_spans degraded to a single-partition window")
   }
 
@@ -74,7 +100,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // table that must plan as a broadcast (llm_ann_graph's broadcasts live
     // inside its checkpoint-truncated walk loop, invisible to this sweep)
     Seq("llm_keyword_tag", "llm_unigram_segment").foreach { n =>
-      assert(plans(n).contains("Broadcast"), s"$n lost its broadcast")
+      assert(plan(n).contains("Broadcast"), s"$n lost its broadcast")
     }
     // the ANN navigation-graph build must pair candidates via the bucket
     // EQUI-join — a cartesian/BNL here is the n² the LSH buckets exist
@@ -106,7 +132,7 @@ class PlanAuditSpec extends AnyFunSuite {
       "ann graph candidates must pair via the bucket key")
     // batching windows are keyed on (bucket, shard): a single-partition
     // window would serialize the corpus behind one task
-    assert(!plans("llm_length_buckets").contains("SinglePartition"),
+    assert(!plan("llm_length_buckets").contains("SinglePartition"),
       "llm_length_buckets degraded to a single-partition window")
   }
 
@@ -116,12 +142,12 @@ class PlanAuditSpec extends AnyFunSuite {
       "llm_tfidf_rank", "llm_bm25_rank", "feat_quantile_bucket",
       "stats_mad_outliers", "a4_rolling_distinct", "tpch_q5",
       "llm_kmeans_iter", "llm_bpe_encode").foreach { n =>
-      assert(plans(n).contains("Broadcast"), s"$n lost its broadcast")
+      assert(plan(n).contains("Broadcast"), s"$n lost its broadcast")
     }
     // Q5's six-table tree must reduce to the two keyed big-side shuffles
     // (lineitem ⋈ orders, then custkey) — supplier/nation/region all fold
     // in as broadcast hash joins, never extra exchanges.
-    val q5 = plans("tpch_q5")
+    val q5 = plan("tpch_q5")
     val bhj = "BroadcastHashJoin".r.findAllIn(q5).size
     assert(bhj >= 3, s"tpch_q5 must broadcast supplier+nation+region, got $bhj")
   }
@@ -129,7 +155,7 @@ class PlanAuditSpec extends AnyFunSuite {
   test("point lookups push their key predicate into the parquet scan") {
     Seq("a5_point_lookup" -> "EqualTo(c_custkey,42)",
       "a5_proj_lookup" -> "EqualTo(c_custkey,42)").foreach { case (n, f) =>
-      assert(plans(n).contains(f), s"$n does not push '$f'")
+      assert(plan(n).contains(f), s"$n does not push '$f'")
     }
   }
 
@@ -138,21 +164,26 @@ class PlanAuditSpec extends AnyFunSuite {
     // (vs one N-way EXPAND); if pruning broke, every pass would read the
     // full 6-column schema and the design would silently be the worst of
     // both. ReadSchema in the scan node is the proof.
-    val plan = plans("profile_orders")
+    val prof = plan("profile_orders")
     val readSchemas = "ReadSchema: struct<([^>]*)>".r
-      .findAllMatchIn(plan).map(_.group(1)).toSeq
-    assert(readSchemas.nonEmpty, s"no scans found in:\n$plan")
+      .findAllMatchIn(prof).map(_.group(1)).toSeq
+    assert(readSchemas.nonEmpty, s"no scans found in:\n$prof")
     assert(readSchemas.forall(s => s.count(_ == ':') == 1),
       s"a profiler pass reads more than one column: $readSchemas")
     // and the text-heavy cascade must not drag unused document columns
     // (lang, source, n_chars) through its scan
     val cascade = "ReadSchema: struct<([^>]*)>".r
-      .findAllMatchIn(plans("llm_filter_cascade")).map(_.group(1)).toSeq
+      .findAllMatchIn(plan("llm_filter_cascade")).map(_.group(1)).toSeq
     assert(cascade.forall(s => !s.contains("lang") && !s.contains("source")),
       s"cascade reads unused columns: $cascade")
   }
 
   test("every registered query resolves and plans without error") {
+    val failed = sweep.toSeq.sortBy(_._1).collect {
+      case (n, Failure(e)) => s"$n: ${e.toString.linesIterator.next()}"
+    }
+    assert(failed.isEmpty,
+      s"${failed.size} lanes did not plan:\n${failed.mkString("\n")}")
     assert(plans.size == SparkEntry.queries.size)
     assert(plans.values.forall(_.nonEmpty))
   }
@@ -198,13 +229,13 @@ class PlanAuditSpec extends AnyFunSuite {
       // count is a 1-row global count(*) broadcast — the window itself
       // stays partitioned on the derived bucket, which the registry-wide
       // logical audit below still proves.)
-      assert(!plans(n).contains("SinglePartition"),
+      assert(!plan(n).contains("SinglePartition"),
         s"$n plans a single-partition exchange")
     }
     // llm_pack_sequences: the ONLY SinglePartition exchange allowed is the
     // 1-row bucket-count aggregate; its prefix-sum window must still be
     // hash-partitioned on the derived bucket key
-    val packPlan = plans("llm_pack_sequences")
+    val packPlan = plan("llm_pack_sequences")
     assert(packPlan.contains("windowspecdefinition(bucket"),
       "llm_pack_sequences window lost its bucket partitioning")
     assert(packPlan.linesIterator.count(_.contains("SinglePartition")) <= 1,
@@ -219,7 +250,6 @@ class PlanAuditSpec extends AnyFunSuite {
     // in the registry must be over frames bounded by something other than
     // data volume; each allowlisted name documents its bound. Any new
     // query that plans a global window over an unbounded frame fails here.
-    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
     val allow = Map(
       // frame = 20 rows, after a LIMIT (top-k id-gen readout)
       "a1_idgen" -> "post-LIMIT 20-row frame",
@@ -229,12 +259,9 @@ class PlanAuditSpec extends AnyFunSuite {
       // walks the x-domain, not the row count)
       "olap_skyline" -> "distinct-x-domain frame",
     )
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val n = fn(spark, sf).queryExecution.optimizedPlan.collect {
-          case w: LWindow if w.partitionSpec.isEmpty => w
-        }.size
-        if (n > 0 && !allow.contains(name)) Some(s"$name($n)") else None
+    val offenders = sweep.toSeq.sortBy(_._1).collect {
+      case (name, Success(p)) if p.globalWindows > 0 && !allow.contains(name) =>
+        s"$name(${p.globalWindows})"
     }
     assert(offenders.isEmpty,
       s"unallowlisted global windows in: ${offenders.mkString(", ")}")
