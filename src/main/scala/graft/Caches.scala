@@ -135,9 +135,9 @@ object Caches {
 
   // ------------------------------------------------- cross-query memo
 
-  /** (key, frame, RDDs the build left persisted) per memo name. */
+  /** (key, frames, RDDs the build left persisted) per memo name. */
   private val memos = scala.collection.mutable.Map
-    .empty[String, (String, DataFrame, Seq[org.apache.spark.rdd.RDD[_]])]
+    .empty[String, (String, Seq[DataFrame], Seq[org.apache.spark.rdd.RDD[_]])]
 
   /** A frame computed ONCE and shared across REGISTRY QUERIES — the seam
     * the per-query [[release]] contract deliberately cannot express.
@@ -145,7 +145,7 @@ object Caches {
     * partition of the identical edge set (the round-13 verdict's "one
     * partition computed twice" item, 11% of the clean bench); the second
     * query reuses the first's frame instead of re-running the
-    * coloring+confirmation rounds.
+    * coloring+confirmation rounds. [[memoSeq]] of one frame.
     *
     * Semantics: `build` runs inside a fresh [[scoped]] block (its
     * intra-construction persists release immediately) and the survivor is
@@ -163,47 +163,26 @@ object Caches {
     * Thread-safe via a coarse lock: concurrent callers of the same name
     * serialize, which is exactly the compute-once semantics wanted. */
   def memo(name: String, key: String)(build: => DataFrame): DataFrame =
-    memos.synchronized {
-      memos.get(name) match {
-        case Some((k, df, _)) if k == key => df
-        case prev =>
-          prev.foreach(_._3.foreach(_.unpersist(blocking = false)))
-          // the backing blocks are tracked as the PERSISTED-RDD DELTA of
-          // the checkpoint step (a localCheckpoint can pin more than the
-          // final LogicalRDD), so a key change can drop every block the
-          // stale frame holds
-          var before: Set[Int] = Set.empty
-          val t0 = System.nanoTime()
-          val df = scoped {
-            val built = build
-            before = built.sparkSession.sparkContext
-              .getPersistentRDDs.keySet.toSet
-            org.apache.spark.sql.GraftShim.withoutOriginStats(
-              built.localCheckpoint())
-          }
-          buildSecs(name) = (System.nanoTime() - t0) / 1e9
-          val after = df.sparkSession.sparkContext.getPersistentRDDs
-          val mine = (after.keySet -- before).toSeq.sorted.map(after(_))
-          memos(name) = (key, df, mine)
-          df
-      }
-    }
+    memoSeq(name, key)(Seq(build)).head
 
   /** [[memo]] for a build that produces SEVERAL frames from ONE shared
     * computation (round-18: the `llm_clf_*` family's four lanes each
     * re-ran the identical 4-round training loop — the curve, weight and
     * score frames are one training run's outputs, so memoizing them
-    * separately would re-train per frame). Same contract as [[memo]]:
-    * build inside a fresh scope, every output an eager stat-less
-    * localCheckpoint, persisted-RDD delta tracked, one `buildSecs` entry
-    * under `name`. Outputs must be model/doc-thin (never corpus-payload-
-    * sized) like every other memo. */
+    * separately would re-train per frame). Every output is an eager
+    * stat-less localCheckpoint, with one `buildSecs` entry under `name`.
+    * Outputs must be model/doc-thin (never corpus-payload-sized) like
+    * every other memo. */
   def memoSeq(name: String, key: String)(build: => Seq[DataFrame])
-      : Seq[DataFrame] = memoSeqs.synchronized {
-    memoSeqs.get(name) match {
+      : Seq[DataFrame] = memos.synchronized {
+    memos.get(name) match {
       case Some((k, dfs, _)) if k == key => dfs
       case prev =>
         prev.foreach(_._3.foreach(_.unpersist(blocking = false)))
+        // the backing blocks are tracked as the PERSISTED-RDD DELTA of
+        // the checkpoint step (a localCheckpoint can pin more than the
+        // final LogicalRDD), so a key change can drop every block the
+        // stale frames hold
         var before: Set[Int] = Set.empty
         val t0 = System.nanoTime()
         val dfs = scoped {
@@ -216,13 +195,10 @@ object Caches {
         buildSecs(name) = (System.nanoTime() - t0) / 1e9
         val after = dfs.head.sparkSession.sparkContext.getPersistentRDDs
         val mine = (after.keySet -- before).toSeq.sorted.map(after(_))
-        memoSeqs(name) = (key, dfs, mine)
+        memos(name) = (key, dfs, mine)
         dfs
     }
   }
-
-  private val memoSeqs = scala.collection.mutable.Map
-    .empty[String, (String, Seq[DataFrame], Seq[org.apache.spark.rdd.RDD[_]])]
 
   /** Wall seconds each memo's build (including its localCheckpoint
     * materialization) cost, by name — the round-14 verdict's "memo
@@ -238,10 +214,6 @@ object Caches {
 
   /** Ids of the RDDs backing live memo frames — the documented survivors
     * of [[release]], so block-leak assertions can subtract them. */
-  def memoRddIds: Set[Int] = {
-    val a = memos.synchronized { memos.values.flatMap(_._3.map(_.id)).toSet }
-    val b = memoSeqs.synchronized {
-      memoSeqs.values.flatMap(_._3.map(_.id)).toSet }
-    a ++ b
-  }
+  def memoRddIds: Set[Int] =
+    memos.synchronized { memos.values.flatMap(_._3.map(_.id)).toSet }
 }

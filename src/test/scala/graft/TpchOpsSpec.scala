@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.{Failure, Success, Try}
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,11 +15,20 @@ class TpchOpsSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   test("every registered query runs and returns a stable schema") {
-    SparkEntry.defs.foreach { d =>
-      val df = d.run(spark, sf)
-      assert(df.columns.nonEmpty, s"${d.name}: no columns")
-      assert(df.count() >= 0, s"${d.name}: count failed")
+    // each lane runs under its own Try, so one failing lane cannot hide the
+    // rest: the assertion names every lane that threw or returned no columns
+    val failing = SparkEntry.defs.flatMap { d =>
+      Try {
+        val df = d.run(spark, sf)
+        assert(df.columns.nonEmpty, "no columns")
+        assert(df.count() >= 0, "count failed")
+      } match {
+        case Success(_) => None
+        case Failure(e) => Some(s"${d.name}: $e")
+      }
     }
+    assert(failing.isEmpty,
+      s"${failing.size} lanes failed:\n${failing.mkString("\n")}")
   }
 
   test("every oracle references at least one known table") {
