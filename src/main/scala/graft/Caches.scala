@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Registry for intra-query `persist()` calls (the similarity/langid ops
   * persist small derived tables that feed multiple consumers within ONE
@@ -153,9 +153,12 @@ object Caches {
     * releasing the construction's caches afterwards cannot strand a lazy
     * plan. The result is stat-less per the [[localCheckpoint]] rationale.
     * Memoization is sound only because every memoized build is a
-    * DETERMINISTIC function of `key` (callers key on the session + input
-    * dir); a key change unpersists the stale frame, so at most one frame
-    * per name is ever live — callers memo only vertex-sized frames, never
+    * DETERMINISTIC function of its key: callers key on the input dir, and
+    * [[memoSeq]] prefixes the active SparkContext's application id, so a
+    * frame whose blocks belong to a stopped context is never handed to a
+    * later one and no caller can leave the session out. A key change
+    * unpersists the stale frame, so at most one frame per name is ever
+    * live — callers memo only vertex-sized frames, never
     * corpus-sized ones. On a real cluster the same seam would be a
     * reliable `checkpoint()` to durable storage (executor loss cannot
     * recompute a lineage-free local checkpoint).
@@ -175,8 +178,9 @@ object Caches {
     * every other memo. */
   def memoSeq(name: String, key: String)(build: => Seq[DataFrame])
       : Seq[DataFrame] = memos.synchronized {
+    val sessionKey = SparkSession.active.sparkContext.applicationId + "|" + key
     memos.get(name) match {
-      case Some((k, dfs, _)) if k == key => dfs
+      case Some((k, dfs, _)) if k == sessionKey => dfs
       case prev =>
         prev.foreach(_._3.foreach(_.unpersist(blocking = false)))
         // the backing blocks are tracked as the PERSISTED-RDD DELTA of
@@ -195,7 +199,7 @@ object Caches {
         buildSecs(name) = (System.nanoTime() - t0) / 1e9
         val after = dfs.head.sparkSession.sparkContext.getPersistentRDDs
         val mine = (after.keySet -- before).toSeq.sorted.map(after(_))
-        memos(name) = (key, dfs, mine)
+        memos(name) = (sessionKey, dfs, mine)
         dfs
     }
   }

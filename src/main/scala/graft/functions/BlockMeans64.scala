@@ -22,8 +22,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * bit-identical).
   *
   * Value contract (pinned by the MultimodalOpsSpec identity/block-mean
-  * replays and the corpus A/B against [[graft.ops.MultimodalOps]]'s
-  * retained HOF witness):
+  * replays and the corpus A/B against the retained test-side HOF
+  * witness `DecodeWitnesses.phashPgmHofOf`):
   *  - block (u, v), 0 ≤ u,v < 8, averages the hb×wb tile rows
   *    [u·hb, (u+1)·hb) × cols [v·wb, (v+1)·wb), hb = h>>3, wb = w>>3 —
   *    exactly the index set the fold's `element_at` walk reads;

@@ -140,6 +140,30 @@ object GraftExtensions {
         HuffStreamDecode(children.head)
       }))
     ext.injectFunction((
+      FunctionIdentifier("rle_payload"),
+      new ExpressionInfo(classOf[RlePayload].getName, "rle_payload"),
+      (children: Seq[Expression]) => {
+        require(children.length == 2,
+          s"rle_payload expects 2 arguments, got ${children.length}")
+        RlePayload(children.head, children(1))
+      }))
+    ext.injectFunction((
+      FunctionIdentifier("huff_payload"),
+      new ExpressionInfo(classOf[HuffPayload].getName, "huff_payload"),
+      (children: Seq[Expression]) => {
+        require(children.length == 2,
+          s"huff_payload expects 2 arguments, got ${children.length}")
+        HuffPayload(children.head, children(1))
+      }))
+    ext.injectFunction((
+      FunctionIdentifier("lz_payload"),
+      new ExpressionInfo(classOf[LzPayload].getName, "lz_payload"),
+      (children: Seq[Expression]) => {
+        require(children.length == 2,
+          s"lz_payload expects 2 arguments, got ${children.length}")
+        LzPayload(children.head, children(1))
+      }))
+    ext.injectFunction((
       FunctionIdentifier("cascade_sigs"),
       new ExpressionInfo(classOf[CascadeSigs].getName, "cascade_sigs"),
       (children: Seq[Expression]) => {

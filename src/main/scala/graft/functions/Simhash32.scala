@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
   * aggregation buffers per row; values are identical — same bytes
   * digested, same first-60-bits read, same sign rule — and the
   * declarative form is retained as the A/B witness
-  * ([[graft.ops.MultimodalOps]] simhashPayloadHofOf). Payloads shorter
+  * (test-side `DecodeWitnesses.simhashPayloadHofOf`). Payloads shorter
   * than 4 bytes have no window: every s_j is 0, none is > 0, result 0 —
   * the CALLER filters those out exactly as the oracle's
   * `length(text) >= 4` does, so the value never surfaces. */

@@ -145,11 +145,11 @@ object EmbeddingOps {
 
   /** Sign-LSH bits over an arbitrary plane RANGE [from, to) of the scaled
     * pool — the [[scaledBucketCol]] fold with a movable start, exposed
-    * package-private for [[graft.AnnScaleProbe]]'s two-level re-bucketing
-    * prototype (the documented LSH-forest escape hatch past the pool-30
-    * design bound: overfull level-1 prefixes get sub-bucketed on the NEXT
-    * `to − from` planes of the same MINSTD stream, so level-2 ids reuse
-    * the pool without new constants). Bit weights restart at 2⁰ relative
+    * package-private for the test-side `graft.AnnScaleProbe`'s two-level
+    * re-bucketing prototype (the documented LSH-forest escape hatch past
+    * the pool-30 design bound: overfull level-1 prefixes get sub-bucketed
+    * on the NEXT `to − from` planes of the same MINSTD stream, so level-2
+    * ids reuse the pool without new constants). Bit weights restart at 2⁰ relative
     * to `from`, keeping any ≤30-plane range inside an INT32. Not on any
     * registry path. */
   private[graft] def probeBucketRange(from: Column, to: Column): Column =
@@ -2381,8 +2381,7 @@ object EmbeddingOps {
     * checkpointed table. Fixture seams pass no frame and build locally,
     * so spec graphs stay self-contained. */
   private def sharedHnswLayers(spark: SparkSession, dir: String): DataFrame =
-    graft.Caches.memo("ann_hnsw_layer_edges",
-      spark.sparkContext.applicationId + "|" + dir) {
+    graft.Caches.memo("ann_hnsw_layer_edges", dir) {
       // partitioned on src BEFORE the checkpoint so per-layer slices keep
       // greedyStep's "edges pre-partitioned on src" invariant — the
       // fallback path repartitions each layer; the memoized frame must
@@ -2587,8 +2586,7 @@ object EmbeddingOps {
     * terminal — exactly the oracle's shared `t1` CTE. Query-count-sized
     * (|queries| × hops), never corpus-sized. */
   private def sharedHnswWalks(spark: SparkSession, dir: String): DataFrame =
-    graft.Caches.memo("ann_hnsw_walks",
-      spark.sparkContext.applicationId + "|" + dir) {
+    graft.Caches.memo("ann_hnsw_walks", dir) {
       annHnswPathsOf(vectors(spark, dir), Some(sharedHnswLayers(spark, dir)))
     }
 
@@ -2598,8 +2596,7 @@ object EmbeddingOps {
     * all three run the identical deterministic beam, and [[BeamEf]] is a
     * sweep point by construction. (|queries| × Σef)-sized. */
   private def sharedHnswBeams(spark: SparkSession, dir: String): DataFrame =
-    graft.Caches.memo("ann_hnsw_beams",
-      spark.sparkContext.applicationId + "|" + dir) {
+    graft.Caches.memo("ann_hnsw_beams", dir) {
       val e = vectors(spark, dir)
       val (_, nodes, layerEdges, q, state) = beamSearchSetup(e,
         Some(sharedHnswLayers(spark, dir)), Some(sharedHnswWalks(spark, dir)))
@@ -3469,9 +3466,9 @@ object EmbeddingOps {
       .orderBy($"src", $"r")
   }
 
-  /** Dev-probe seam (driven by [[graft.AnnScaleProbe]], not a registry
-    * lane): the EXACT candidate-pair volume [[annMergeOf]]'s four bucket
-    * joins process over `e`, with the plane count optionally CLAMPED
+  /** Dev-probe seam (driven by the test-side `graft.AnnScaleProbe`, not a
+    * registry lane): the EXACT candidate-pair volume [[annMergeOf]]'s four
+    * bucket joins process over `e`, with the plane count optionally CLAMPED
     * below the ladder to replay the historical 12-/16-plane pools. The
     * joins run on `(vec_id, bucket)` ONLY — payload vectors never enter —
     * so the count costs MBs of shuffle at sizes whose timed merge would

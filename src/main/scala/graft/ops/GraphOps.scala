@@ -52,8 +52,7 @@ object GraphOps {
     * every analytics job reads instead of re-mining the fact table.
     * Fixture seams keep taking an explicit edge frame. */
   private def minedEdges(spark: SparkSession, dir: String): DataFrame =
-    graft.Caches.memo("graph_cooccur_edges",
-      spark.sparkContext.applicationId + "|" + dir) {
+    graft.Caches.memo("graph_cooccur_edges", dir) {
       cooccurEdges(Tables.lineitem(spark, dir))
     }
 
@@ -1581,8 +1580,7 @@ object GraphOps {
     * SCC memo closed in round 14. Vertex-sized (node, comm). Fixture
     * seams pass no frame and pay the local rounds. */
   private def sharedLouvainFine(spark: SparkSession, dir: String): DataFrame =
-    graft.Caches.memo("graph_louvain_fine",
-      spark.sparkContext.applicationId + "|" + dir) {
+    graft.Caches.memo("graph_louvain_fine", dir) {
       louvainAssignOf(minedEdges(spark, dir),
         LouvainRounds)
     }
@@ -2094,8 +2092,7 @@ object GraphOps {
     * clean bench (round-13 verdict). Vertex-sized (node, scc_id,
     * n_members) — safe to keep live for a whole runner session. */
   private def sharedScc(spark: SparkSession, dir: String): DataFrame =
-    graft.Caches.memo("graph_scc_frame",
-      spark.sparkContext.applicationId + "|" + dir) {
+    graft.Caches.memo("graph_scc_frame", dir) {
       sccOf(brandSuccessorEdges(
         Tables.lineitem(spark, dir), Tables.part(spark, dir)))
     }

@@ -448,42 +448,21 @@ object MultimodalOps {
     * Round-18 (§4): the 32-bit fingerprint computes in the native
     * [[graft.functions.Simhash32]] expression — one linear pass over the
     * payload bytes per document — so the whole per-doc stage is a MAP-ONLY
-    * projection; the old form ([[simhashPayloadHofOf]], retained as the
-    * A/B witness) exploded every 4-byte window into a row (corpus bytes ×
-    * row overhead), paid an md5hash60 call + binary slice per window, and
-    * updated 32 conditional-sum aggregation buffers per row through a
-    * doc-keyed hash aggregate. Same bytes digested, same sign rule, same
-    * band join — the spec pins native ≡ declarative per doc. */
+    * projection; the old form (the test-side A/B witness
+    * `DecodeWitnesses.simhashPayloadHofOf`) exploded every 4-byte window
+    * into a row (corpus bytes × row overhead), paid an md5hash60 call +
+    * binary slice per window, and updated 32 conditional-sum aggregation
+    * buffers per row through a doc-keyed hash aggregate. Same bytes
+    * digested, same sign rule, same band join — the spec pins native ≡
+    * declarative per doc. */
   private[graft] def simhashPayloadOf(media: DataFrame): DataFrame =
     simhashBandPairs(media
       .filter(length($"payload") >= 4)
       .select($"doc_id", call_function("simhash32", $"payload").as("simhash")))
 
-  /** The declarative explode/agg form of the [[simhashPayloadOf]]
-    * fingerprint — the A/B witness for [[graft.functions.Simhash32]]. */
-  private[graft] def simhashPayloadHofOf(media: DataFrame): DataFrame = {
-    val grams = media
-      .select($"doc_id", $"payload")
-      .filter(length($"payload") >= 4)
-      .select($"doc_id",
-        explode(transform(sequence(lit(1), length($"payload") - 3),
-          i => $"payload".substr(i, lit(4)))).as("g"))
-    val sums = (0 until 32).map(j =>
-      sum(when(shiftright($"hv", j).bitwiseAND(lit(1L)) === 1L, 1)
-        .otherwise(-1)).as(s"s$j"))
-    val bits = (0 until 32)
-      .map(j => when(col(s"s$j") > 0, lit(1L << j)).otherwise(lit(0L)))
-      .reduce(_ + _)
-    val f = grams
-      .select($"doc_id", call_function("md5hash60", $"g").as("hv"))
-      .groupBy($"doc_id").agg(sums.head, sums.tail: _*)
-      .select($"doc_id", bits.as("simhash"))
-    simhashBandPairs(f)
-  }
-
   /** Hamming ≤ 1 pair mining over a `(doc_id, simhash)` fingerprint frame
     * — two 16-bit band equi-joins, exact by pigeonhole. */
-  private def simhashBandPairs(f: DataFrame): DataFrame = {
+  private[graft] def simhashBandPairs(f: DataFrame): DataFrame = {
     val bands = f.select($"doc_id", $"simhash",
       explode(array((0 until 2).map(b => struct(
         lit(b).as("band"),
@@ -506,7 +485,7 @@ object MultimodalOps {
     * integers, embedded as the SAME literals in both engines so the
     * transform is exact integer algebra end-to-end (the repo's
     * quantize-before-shuffle rule applied to a signal transform). */
-  private val DctPpm: IndexedSeq[Long] =
+  private[graft] val DctPpm: IndexedSeq[Long] =
     for (u <- 0 until 8; x <- 0 until 8)
       yield math.round(math.cos(math.Pi * (2 * x + 1) * u / 16.0) * 1e6)
 
@@ -567,8 +546,7 @@ object MultimodalOps {
     * dedup family). Doc-count-sized, 16 bytes a row. Fixture seams pass
     * no frame and compute locally. */
   private def sharedPhash(spark: SparkSession, dir: String): DataFrame =
-    graft.Caches.memo("mm_phash_frame",
-      spark.sparkContext.applicationId + "|" + dir) {
+    graft.Caches.memo("mm_phash_frame", dir) {
       phashOf(mediaTable(spark, dir))
     }
 
@@ -604,39 +582,8 @@ object MultimodalOps {
     * [[phashPgmOf]] (the decode seam changes WHERE pixels come from, the
     * transform never changes). Callers must pass a [[bindOnce]]-bound
     * variable: `px` is referenced 8× per output coefficient. */
-  private def dctHash(px: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  private[graft] def dctHash(px: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     call_function("dct_phash", px)
-
-  /** The pre-round-17 higher-order-function form of [[dctHash]] — kept
-    * verbatim as the A/B witness for the native expression (the
-    * HilbertKey native-equals-fold discipline): MultimodalOpsSpec pins
-    * `dct_phash(px) ≡ dctHashHof(px)` on decoded corpus rows, so the
-    * native transform can never drift from the oracle-mirrored fold. */
-  private[graft] def dctHashHof(px: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val clLit = array(DctPpm.map(lit): _*)
-    val p2Lit = array((0 until 63).map(k => lit(1L << k)): _*)
-    bindOnce(transform(sequence(lit(0), lit(63)), i => {
-      val u = shiftright(i, 3)
-      val y = i.bitwiseAND(lit(7))
-      (0 until 8).map(x =>
-        element_at(px, lit(8 * x) + y + 1) *
-          element_at(clLit, u * 8 + lit(x) + 1)).reduce(_ + _)
-    })) { g =>
-      bindOnce(transform(sequence(lit(0), lit(63)), i => {
-        val u = shiftright(i, 3)
-        val v = i.bitwiseAND(lit(7))
-        (0 until 8).map(y =>
-          element_at(g, u * 8 + lit(y) + 1) *
-            element_at(clLit, v * 8 + lit(y) + 1)).reduce(_ + _)
-      })) { f =>
-        bindOnce(aggregate(slice(f, 2, 63), lit(0L), _ + _)) { sumac =>
-          aggregate(sequence(lit(1), lit(63)), lit(0L),
-            (acc, i) => acc + when(element_at(f, i + 1) * 63L > sumac,
-              element_at(p2Lit, i)).otherwise(0L))
-        }
-      }
-    }
-  }
 
   /** Per-doc 63-bit perceptual hash over any `(doc_id, payload)` frame —
     * the [[phash]] body, extracted for [[phashPairs]] and the replay
@@ -778,14 +725,14 @@ object MultimodalOps {
     * the scan, and the payload build and decode run once, downstream of
     * it. No partition count: AQE sizes the exchange from the observed
     * bytes — one partition for a sub-MiB corpus, wide at scale. */
-  private def payloadDocs(docs: DataFrame): DataFrame =
+  private[graft] def payloadDocs(docs: DataFrame): DataFrame =
     docs.filter(length($"text") > 0).repartitionByRange($"doc_id")
 
   // ------------------------------------------------ real binary format: PGM
 
   /** Header pattern of a binary PGM (netpbm "P5"): magic, width, height,
     * maxval, each newline-terminated, raster bytes after. */
-  private val PgmPat = "^P5\\n(\\d+) (\\d+)\\n(\\d+)\\n"
+  private[graft] val PgmPat = "^P5\\n(\\d+) (\\d+)\\n(\\d+)\\n"
 
   /** Deterministic byte-valid PGM (P5 raw grayscale) payload per document
     * — the ONE REAL BINARY IMAGE FORMAT of the multimodal lane (round-13
@@ -927,8 +874,9 @@ object MultimodalOps {
     * Parse → 8×8 block-mean downsample → [[dctHash]]; every stage
     * [[bindOnce]]-bound (the staged-withColumn Catalyst collapse lesson).
     * `hashFn` (round-18, ADVICE): the final DCT-hash stage as a seam so
-    * the A/B spec can wire [[dctHashHof]] through the SAME decoded pixels
-    * and pin the native lane end-to-end by value.
+    * the A/B spec can wire the test-side `DecodeWitnesses.dctHashHof`
+    * through the SAME decoded pixels and pin the native lane end-to-end
+    * by value.
     *
     * Round-18 (§4): the 8×8 block-mean downsample runs in the native
     * [[graft.functions.BlockMeans64]] expression — one sequential
@@ -937,8 +885,8 @@ object MultimodalOps {
     * per pixel over the [[graft.functions.AsciiCodes]] array (w×h lambda
     * evaluations per doc through the HOF evaluator). Same code points,
     * same tile index sets, same floor-of-double division — the retained
-    * fold ([[phashPgmHofOf]]) is the A/B witness the spec replays on
-    * fixtures + corpus. */
+    * fold (test-side `DecodeWitnesses.phashPgmHofOf`) is the A/B witness
+    * the spec replays on fixtures + corpus. */
   private[graft] def phashPgmOf(media: DataFrame,
       hashFn: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
         dctHash): DataFrame = {
@@ -955,53 +903,6 @@ object MultimodalOps {
             length(c.getField("s"))),
           c.getField("ws").cast("long"),
           c.getField("hs").cast("long"))) { px => hashFn(px) })
-    }
-    media.select($"doc_id", hash.as("phash"))
-  }
-
-  /** The declarative HOF form of the [[phashPgmOf]] downsample — the A/B
-    * witness for [[graft.functions.BlockMeans64]]. */
-  private[graft] def phashPgmHofOf(media: DataFrame,
-      hashFn: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-        dctHash): DataFrame = {
-    val s = decode($"payload", "UTF-8")
-    val hash = bindOnce(struct(
-      regexp_extract(s, "^(P5\\n\\d+ \\d+\\n\\d+\\n)", 1).as("hdr"),
-      regexp_extract(s, PgmPat, 1).as("ws"),
-      regexp_extract(s, PgmPat, 2).as("hs"),
-      s.as("s"))) { c =>
-      val ok = length(c.getField("hdr")) > 0
-      when(ok,
-        bindOnce(struct(
-          c.getField("ws").cast("long").as("w"),
-          c.getField("hs").cast("long").as("h"),
-          shiftright(c.getField("ws").cast("long"), 3).as("wb"),
-          shiftright(c.getField("hs").cast("long"), 3).as("hb"),
-          // split ONCE into a code array: every tile read below is then an
-          // O(1) element_at instead of a substr that re-scans the raster
-          // (measured 14.4 s → see COVERAGE for the split-once number);
-          // round-17: native ascii_codes — long elements, no per-char
-          // single-character strings
-          call_function("ascii_codes",
-            c.getField("s").substr(length(c.getField("hdr")) + 1,
-              length(c.getField("s")))).as("rc"))) { d =>
-          val w = d.getField("w")
-          val wb = d.getField("wb")
-          val hb = d.getField("hb")
-          val rc = d.getField("rc")
-          bindOnce(transform(sequence(lit(0L), lit(63L)), i => {
-            val u = shiftright(i, 3)
-            val v = i.bitwiseAND(lit(7L))
-            val cnt = hb * wb
-            // block mean: sum over the hb×wb tile, then exact integer DIV
-            // (sums < 2^11, doubles exact — floor is engine-safe here)
-            floor(aggregate(sequence(lit(0L), cnt - 1), lit(0L), (acc, a) =>
-              acc + element_at(rc,
-                (((u * hb + floor(a / wb).cast("long")) * w
-                  + v * wb + (a % wb)) + 1).cast("int")))
-              / cnt).cast("long")
-          })) { px => hashFn(px) }
-        })
     }
     media.select($"doc_id", hash.as("phash"))
   }
@@ -1335,40 +1236,21 @@ object MultimodalOps {
     * untouched: the automaton still walks every self-delimiting token
     * of every payload; only how many tokens a synthetic scale-up
     * fabricates changes. */
-  private[graft] def rlePayloadOf(docs: DataFrame): DataFrame =
-    rlePayloadOf(docs, rleTokDivOf(docs))
+  private[graft] def rlePayloadOf(docs: DataFrame, div: DataFrame): DataFrame =
+    nativePayloadOf("rle_payload", docs, div)
 
-  private[graft] def rlePayloadOf(docs: DataFrame, div: DataFrame): DataFrame = {
+  /** One payload builder over the documents: the [[payloadDocs]] exchange,
+    * the 1-row token divisor `div` broadcast beside it, and one native
+    * builder call per document ([[graft.functions.RlePayload]] and its
+    * siblings) — one code-point loop instead of interpreted per-token
+    * lambdas; the test-side `DecodeWitnesses` keeps the lambda forms as
+    * the A/B witnesses. */
+  private def nativePayloadOf(fn: String, docs: DataFrame,
+      div: DataFrame): DataFrame =
     payloadDocs(docs)
       .crossJoin(broadcast(div))
       .select($"doc_id",
-      encode(concat(lit("RL1\n"),
-        // round-17: split-once ascii codes (see pgmPayloadOf) — each
-        // token's substr re-scanned the document
-        bindOnce(struct(
-          call_function("ascii_codes", $"text").as("tc"),
-          length($"text").cast("long").as("n"), $"q".as("q"))) { c =>
-          val tc = c.getField("tc")
-          val n = c.getField("n")
-          array_join(transform(
-            sequence(lit(0L),
-              greatest(lit(3L), floor((lit(8L) + (n * 3L) % 57L)
-                / c.getField("q")).cast("long")) - 1L),
-            j => bindOnce((element_at(tc, (j % n + 1L).cast("int"))
-                * 37L + j * 11L) % 96L) { u =>
-              val rep = concat(
-                call_function("chr", lit(64L) + u % 60L),
-                call_function("chr", lit(32L) + (u * 5L + j) % 96L))
-              val lL = lit(1L) + u % 5L
-              val lits = concat(
-                call_function("chr", lL),
-                array_join(transform(sequence(lit(0L), lL - 1L),
-                  i => call_function("chr",
-                    lit(32L) + (u * 7L + j + i * 13L) % 96L)), ""))
-              when(u % 3L === 0L, rep).otherwise(lits)
-            }), "")
-        }), "UTF-8").as("payload"))
-  }
+        encode(call_function(fn, $"text", $"q"), "UTF-8").as("payload"))
 
   /** Doc-count floor and step cap for the RLE token-volume ladder: all
     * driver SFs sit at the floor (≤50k non-empty docs at the sf1
@@ -1406,7 +1288,8 @@ object MultimodalOps {
   /** Corpus token-divisor frame, memo-shared across the RLE / Huffman /
     * LZ media-table builds in one session (round-16 ADVICE: each payload
     * build re-aggregated the identical 1-row divisor, adding a full
-    * `documents` scan per lane). Keyed by dir; [[graft.Caches.memo]]
+    * `documents` scan per lane). Keyed by (session, dir), the session
+    * part added by [[graft.Caches.memo]] itself, which also
     * localCheckpoints the 1-row frame so every lane after the first pays
     * zero scans for it, and the build cost is priced in `memo_build_s`. */
   private def tokDivFor(spark: SparkSession, dir: String): DataFrame =
@@ -1501,45 +1384,8 @@ object MultimodalOps {
     * [[rleTokDivOf]] over the identical count base (oracle-mirrored
     * `lad` CTE), so total payload stays in a constant band; every
     * driver SF sits at the q = 1 floor, bit-identical. */
-  private[graft] def huffPayloadOf(docs: DataFrame): DataFrame =
-    huffPayloadOf(docs, rleTokDivOf(docs))
-
-  private[graft] def huffPayloadOf(docs: DataFrame, div: DataFrame): DataFrame = {
-    payloadDocs(docs)
-      .crossJoin(broadcast(div))
-      .select($"doc_id",
-      encode(concat(lit("HF1\n"),
-        // round-17: split-once ascii codes (see pgmPayloadOf)
-        bindOnce(struct(
-          call_function("ascii_codes", $"text").as("tc"),
-          length($"text").cast("long").as("n"), $"q".as("q"))) { c =>
-          val tc = c.getField("tc")
-          val n = c.getField("n")
-          bindOnce(greatest(lit(2L), floor((lit(8L) + (n * 5L) % 48L)
-              / c.getField("q")).cast("long"))) { m =>
-            val codes = array_join(transform(sequence(lit(0L), m - 1L),
-              j => bindOnce((element_at(tc, (j % n + 1L).cast("int"))
-                  * 29L + j * 13L) % 8L) { k =>
-                when(k === 7L, lit("1111111"))
-                  .otherwise(concat(lit("1111111").substr(lit(1),
-                    k.cast("int")), lit("0")))
-              }), "")
-            val header = concat(
-              call_function("chr", lit(32L) + floor(m / 64L).cast("long")),
-              call_function("chr", lit(32L) + m % 64L))
-            concat(header, bindOnce(codes) { cs =>
-              bindOnce(concat(cs, lit("11111").substr(lit(1),
-                ((lit(6) - length(cs) % 6) % 6)))) { bb =>
-                array_join(transform(
-                  sequence(lit(0L), floor(length(bb) / 6).cast("long") - 1L),
-                  g => call_function("chr", lit(32L) +
-                    conv(bb.substr((g * 6L + 1L).cast("int"), lit(6)),
-                      2, 10).cast("long"))), "")
-              }
-            })
-          }
-        }), "UTF-8").as("payload"))
-  }
+  private[graft] def huffPayloadOf(docs: DataFrame, div: DataFrame): DataFrame =
+    nativePayloadOf("huff_payload", docs, div)
 
   /** The Huffman media table over the corpus. */
   private[graft] def huffMediaTable(spark: SparkSession, dir: String): DataFrame =
@@ -1634,65 +1480,8 @@ object MultimodalOps {
     * corpus ladder as the RLE/Huffman lanes ([[rleTokDivOf]]'s q,
     * oracle-mirrored), so payload volume stays in a constant band;
     * every driver SF sits at the q = 1 floor, bit-identical. */
-  private[graft] def lzPayloadOf(docs: DataFrame, div: DataFrame): DataFrame = {
-    def chrOf(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      call_function("chr", c)
-    payloadDocs(docs)
-      .crossJoin(broadcast(div))
-      .select($"doc_id",
-        // round-17: split-once ascii codes (see pgmPayloadOf)
-        encode(bindOnce(struct(
-          call_function("ascii_codes", $"text").as("tc"),
-          length($"text").cast("long").as("n"), $"q".as("q"))) { cc =>
-          val tc = cc.getField("tc")
-          val n = cc.getField("n")
-          bindOnce((element_at(tc, 1) * 31L)
-              % 96L) { dh =>
-            bindOnce(greatest(lit(4L), floor((lit(8L) + (n * 7L) % 40L)
-                / cc.getField("q")).cast("long"))) { m =>
-              val pre = array_join(transform(sequence(lit(0L), lit(7L)),
-                i => concat(lit("L"),
-                  chrOf(lit(32L) + (dh + i * 17L) % 96L))), "")
-              aggregate(sequence(lit(0L), m - 1L),
-                struct(pre.as("s"), lit(8L).as("off"), lit(8L).as("tk")),
-                (st, j) => bindOnce((element_at(tc, (j % n + 1L)
-                    .cast("int")) * 23L + j * 19L)
-                    % 96L) { u =>
-                  bindOnce(chrOf(lit(32L) + (u * 5L + j) % 96L)) { cch =>
-                    val s0 = st.getField("s")
-                    val off = st.getField("off")
-                    val tk = st.getField("tk")
-                    val lC = lit(2L) + u % 6L
-                    val pC = lit(1L) + u % 4L
-                    // dist for the prefix copy = output length AFTER the
-                    // leading literal, so the source window starts at 0
-                    val dist = off + 1L
-                    val litTok = concat(lit("L"), cch)
-                    val copyO = concat(lit("C"), chrOf(lit(32L) + lC),
-                      lit(" !")) // dist 1: hi chr(32), lo chr(33)
-                    val copyP = concat(lit("C"), chrOf(lit(32L) + pC),
-                      chrOf(lit(32L) + floor(dist / 64L).cast("long")),
-                      chrOf(lit(32L) + dist % 64L))
-                    when(u % 3L === 0L,
-                      struct(concat(s0, litTok).as("s"),
-                        (off + 1L).as("off"), (tk + 1L).as("tk")))
-                      .when(u % 3L === 1L,
-                        struct(concat(s0, litTok, copyO).as("s"),
-                          (off + 1L + lC).as("off"), (tk + 2L).as("tk")))
-                      .otherwise(
-                        struct(concat(s0, litTok, copyP).as("s"),
-                          (off + 1L + pC).as("off"), (tk + 2L).as("tk")))
-                  }
-                },
-                st => concat(lit("LZ1\n"),
-                  chrOf(lit(32L) + floor(st.getField("tk") / 64L)
-                    .cast("long")),
-                  chrOf(lit(32L) + st.getField("tk") % 64L),
-                  st.getField("s")))
-            }
-          }
-        }, "UTF-8").as("payload"))
-  }
+  private[graft] def lzPayloadOf(docs: DataFrame, div: DataFrame): DataFrame =
+    nativePayloadOf("lz_payload", docs, div)
 
   /** The LZ media table over the corpus. */
   private[graft] def lzMediaTable(spark: SparkSession, dir: String): DataFrame =

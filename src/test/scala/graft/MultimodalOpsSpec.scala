@@ -189,7 +189,7 @@ class MultimodalOpsSpec extends AnyFunSuite {
     def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(pairs(MultimodalOps.simhashPayloadOf(corpus)) ==
-      pairs(MultimodalOps.simhashPayloadHofOf(corpus)))
+      pairs(DecodeWitnesses.simhashPayloadHofOf(corpus)))
     val bin = Seq(
       (0L, Array.tabulate(64)(i => ((i * 41 + 7) % 256).toByte)),
       (1L, Array.tabulate(64)(i => ((i * 41 + 7) % 256).toByte)),
@@ -199,7 +199,7 @@ class MultimodalOpsSpec extends AnyFunSuite {
     val natF = bin.filter(length($"payload") >= 4)
       .select($"doc_id", call_function("simhash32", $"payload"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val hofP = pairs(MultimodalOps.simhashPayloadHofOf(bin))
+    val hofP = pairs(DecodeWitnesses.simhashPayloadHofOf(bin))
     assert(pairs(MultimodalOps.simhashPayloadOf(bin)) == hofP)
     assert(natF(0L) == natF(1L) && natF.size == 3,
       "identical binary payloads fingerprint equal; sub-gram doc excluded")
@@ -699,7 +699,7 @@ class MultimodalOpsSpec extends AnyFunSuite {
       .toDF("id", "px")
     val got = df.select($"id",
         call_function("dct_phash", $"px").as("native"),
-        MultimodalOps.dctHashHof($"px").as("hof"))
+        DecodeWitnesses.dctHashHof($"px").as("hof"))
       .collect()
     got.foreach(r => assert(r.getLong(1) == r.getLong(2),
       s"block ${r.getLong(0)}: native ${r.getLong(1)} != hof ${r.getLong(2)}"))
@@ -716,7 +716,7 @@ class MultimodalOpsSpec extends AnyFunSuite {
     val media = MultimodalOps.pgmMediaTable(spark, sf)
     val nat = MultimodalOps.phashPgmOf(media).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val hof = MultimodalOps.phashPgmOf(media, MultimodalOps.dctHashHof)
+    val hof = MultimodalOps.phashPgmOf(media, DecodeWitnesses.dctHashHof)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(nat.nonEmpty && nat == hof,
       s"native vs HOF PGM pHash diverge on ${nat.size}/${hof.size} docs")
@@ -742,7 +742,7 @@ class MultimodalOpsSpec extends AnyFunSuite {
     for (media <- Seq(fixtures, corpus)) {
       val nat = MultimodalOps.phashPgmOf(media).collect()
         .map(r => r.getLong(0) -> r.toSeq.tail).toMap
-      val hof = MultimodalOps.phashPgmHofOf(media).collect()
+      val hof = DecodeWitnesses.phashPgmHofOf(media).collect()
         .map(r => r.getLong(0) -> r.toSeq.tail).toMap
       assert(nat.keySet == hof.keySet)
       nat.keys.foreach(id => assert(nat(id) == hof(id),

@@ -19,6 +19,9 @@ class PayloadExchangeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private val lanes = Seq("mm_rle_decode", "mm_huffman_decode", "mm_lz_decode",
     "mm_pgm_decode", "mm_phash_pgm", "mm_wav_energy", "mm_wav_zcr")
 
+  private val builder = Map("mm_rle_decode" -> "rle_payload",
+    "mm_huffman_decode" -> "huff_payload", "mm_lz_decode" -> "lz_payload")
+
   test("payload lanes shuffle the document text once, by doc_id range, below the payload build") {
     lanes.foreach { n =>
       val plan = SparkEntry.queries(n)(spark, sf).queryExecution.executedPlan
@@ -34,13 +37,18 @@ class PayloadExchangeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       assert(keys == Seq("doc_id"),
         s"$n range-partitions on $keys, not doc_id alone")
       // below the payload projection: the exchange carries the narrow
-      // document input, and neither the payload build nor the decode runs
+      // document input, and neither the payload build (the lambda form's
+      // ascii_codes, or a native *_payload builder) nor the decode runs
       // under it (so the range sampler never runs them)
       assert(ex.output.map(_.name).toSet == Set("doc_id", "text"),
         s"$n shuffles ${ex.output.map(_.name)}, not (doc_id, text)")
       val below = ex.child.treeString
-      assert(!below.contains("ascii_codes") && !below.contains("_stream_decode"),
+      val builds = Seq("ascii_codes", "rle_payload", "huff_payload", "lz_payload")
+      assert(!builds.exists(below.contains) && !below.contains("_stream_decode"),
         s"$n builds or decodes its payload under the exchange:\n$below")
+      // the native builders do run in these lanes, above the exchange
+      builder.get(n).foreach(b => assert(plan.toString.contains(b),
+        s"$n does not build its payload with $b:\n$plan"))
       // the only other exchange is the 1-row token-divisor broadcast of
       // the RLE/Huffman/LZ builders
       val broadcasts = collect(plan) { case b: BroadcastExchangeLike => b }

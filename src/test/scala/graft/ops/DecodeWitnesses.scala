@@ -3,15 +3,23 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import MultimodalOps.{bindOnce, evalOnce}
+import MultimodalOps.{DctPpm, PgmPat, bindOnce, dctHash, evalOnce, payloadDocs,
+  simhashBandPairs}
 
-/** The higher-order-function decode automata the native `rle_stream_decode`,
-  * `huff_stream_decode` and `lz_stream_decode` expressions replaced. Each
-  * walks its payload with an interpreted `aggregate` fold over the same
-  * `(doc_id, payload)` frame as the matching `MultimodalOps.*DecodeOf`
-  * fixture seam and yields the same columns, so `MultimodalOpsSpec` can pin
-  * native ≡ fold by value on corpus payloads and hand-packed malformed
-  * fixtures. Only the specs use them; the registered lanes run the native
+/** The higher-order-function forms `MultimodalOps`' native expressions
+  * replaced, kept as A/B witnesses:
+  *  - the decode automata of `rle_stream_decode`, `huff_stream_decode` and
+  *    `lz_stream_decode`: each walks its payload with an interpreted
+  *    `aggregate` fold over the same `(doc_id, payload)` frame as the
+  *    matching `MultimodalOps.*DecodeOf` fixture seam and yields the same
+  *    columns, so `MultimodalOpsSpec` pins native ≡ fold by value on corpus
+  *    payloads and hand-packed malformed fixtures;
+  *  - the payload builders of `rle_payload`, `huff_payload` and
+  *    `lz_payload`, over the same `(docs, div)` inputs as
+  *    `MultimodalOps.*PayloadOf` (`MediaPayloadsSpec` compares the bytes);
+  *  - the simhash, DCT-hash and PGM block-mean folds of `simhash32`,
+  *    `dct_phash` and `block_means64`.
+  * Only the specs use them; the registered lanes run the native
   * expressions.
   */
 object DecodeWitnesses {
@@ -271,5 +279,242 @@ object DecodeWitnesses {
         $"o.n_toks".as("n_toks"), $"o.n_copies".as("n_copies"),
         $"o.out_len".as("out_len"), $"o.value_sum".as("value_sum"),
         $"o.wsum".as("wsum"), $"o.ok".as("ok"))
+  }
+
+  /** The pre-native lambda form of `MultimodalOps.rlePayloadOf` — the A/B
+    * witness for [[graft.functions.RlePayload]]. */
+  def rlePayloadHofOf(docs: DataFrame, div: DataFrame): DataFrame = {
+    payloadDocs(docs)
+      .crossJoin(broadcast(div))
+      .select($"doc_id",
+      encode(concat(lit("RL1\n"),
+        // round-17: split-once ascii codes (see pgmPayloadOf) — each
+        // token's substr re-scanned the document
+        bindOnce(struct(
+          call_function("ascii_codes", $"text").as("tc"),
+          length($"text").cast("long").as("n"), $"q".as("q"))) { c =>
+          val tc = c.getField("tc")
+          val n = c.getField("n")
+          array_join(transform(
+            sequence(lit(0L),
+              greatest(lit(3L), floor((lit(8L) + (n * 3L) % 57L)
+                / c.getField("q")).cast("long")) - 1L),
+            j => bindOnce((element_at(tc, (j % n + 1L).cast("int"))
+                * 37L + j * 11L) % 96L) { u =>
+              val rep = concat(
+                call_function("chr", lit(64L) + u % 60L),
+                call_function("chr", lit(32L) + (u * 5L + j) % 96L))
+              val lL = lit(1L) + u % 5L
+              val lits = concat(
+                call_function("chr", lL),
+                array_join(transform(sequence(lit(0L), lL - 1L),
+                  i => call_function("chr",
+                    lit(32L) + (u * 7L + j + i * 13L) % 96L)), ""))
+              when(u % 3L === 0L, rep).otherwise(lits)
+            }), "")
+        }), "UTF-8").as("payload"))
+  }
+
+  /** The pre-native lambda form of `MultimodalOps.huffPayloadOf` — the A/B
+    * witness for [[graft.functions.HuffPayload]]. */
+  def huffPayloadHofOf(docs: DataFrame, div: DataFrame): DataFrame = {
+    payloadDocs(docs)
+      .crossJoin(broadcast(div))
+      .select($"doc_id",
+      encode(concat(lit("HF1\n"),
+        // round-17: split-once ascii codes (see pgmPayloadOf)
+        bindOnce(struct(
+          call_function("ascii_codes", $"text").as("tc"),
+          length($"text").cast("long").as("n"), $"q".as("q"))) { c =>
+          val tc = c.getField("tc")
+          val n = c.getField("n")
+          bindOnce(greatest(lit(2L), floor((lit(8L) + (n * 5L) % 48L)
+              / c.getField("q")).cast("long"))) { m =>
+            val codes = array_join(transform(sequence(lit(0L), m - 1L),
+              j => bindOnce((element_at(tc, (j % n + 1L).cast("int"))
+                  * 29L + j * 13L) % 8L) { k =>
+                when(k === 7L, lit("1111111"))
+                  .otherwise(concat(lit("1111111").substr(lit(1),
+                    k.cast("int")), lit("0")))
+              }), "")
+            val header = concat(
+              call_function("chr", lit(32L) + floor(m / 64L).cast("long")),
+              call_function("chr", lit(32L) + m % 64L))
+            concat(header, bindOnce(codes) { cs =>
+              bindOnce(concat(cs, lit("11111").substr(lit(1),
+                ((lit(6) - length(cs) % 6) % 6)))) { bb =>
+                array_join(transform(
+                  sequence(lit(0L), floor(length(bb) / 6).cast("long") - 1L),
+                  g => call_function("chr", lit(32L) +
+                    conv(bb.substr((g * 6L + 1L).cast("int"), lit(6)),
+                      2, 10).cast("long"))), "")
+              }
+            })
+          }
+        }), "UTF-8").as("payload"))
+  }
+
+  /** The pre-native lambda form of `MultimodalOps.lzPayloadOf` — the A/B
+    * witness for [[graft.functions.LzPayload]]. */
+  def lzPayloadHofOf(docs: DataFrame, div: DataFrame): DataFrame = {
+    def chrOf(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+      call_function("chr", c)
+    payloadDocs(docs)
+      .crossJoin(broadcast(div))
+      .select($"doc_id",
+        // round-17: split-once ascii codes (see pgmPayloadOf)
+        encode(bindOnce(struct(
+          call_function("ascii_codes", $"text").as("tc"),
+          length($"text").cast("long").as("n"), $"q".as("q"))) { cc =>
+          val tc = cc.getField("tc")
+          val n = cc.getField("n")
+          bindOnce((element_at(tc, 1) * 31L)
+              % 96L) { dh =>
+            bindOnce(greatest(lit(4L), floor((lit(8L) + (n * 7L) % 40L)
+                / cc.getField("q")).cast("long"))) { m =>
+              val pre = array_join(transform(sequence(lit(0L), lit(7L)),
+                i => concat(lit("L"),
+                  chrOf(lit(32L) + (dh + i * 17L) % 96L))), "")
+              aggregate(sequence(lit(0L), m - 1L),
+                struct(pre.as("s"), lit(8L).as("off"), lit(8L).as("tk")),
+                (st, j) => bindOnce((element_at(tc, (j % n + 1L)
+                    .cast("int")) * 23L + j * 19L)
+                    % 96L) { u =>
+                  bindOnce(chrOf(lit(32L) + (u * 5L + j) % 96L)) { cch =>
+                    val s0 = st.getField("s")
+                    val off = st.getField("off")
+                    val tk = st.getField("tk")
+                    val lC = lit(2L) + u % 6L
+                    val pC = lit(1L) + u % 4L
+                    // dist for the prefix copy = output length AFTER the
+                    // leading literal, so the source window starts at 0
+                    val dist = off + 1L
+                    val litTok = concat(lit("L"), cch)
+                    val copyO = concat(lit("C"), chrOf(lit(32L) + lC),
+                      lit(" !")) // dist 1: hi chr(32), lo chr(33)
+                    val copyP = concat(lit("C"), chrOf(lit(32L) + pC),
+                      chrOf(lit(32L) + floor(dist / 64L).cast("long")),
+                      chrOf(lit(32L) + dist % 64L))
+                    when(u % 3L === 0L,
+                      struct(concat(s0, litTok).as("s"),
+                        (off + 1L).as("off"), (tk + 1L).as("tk")))
+                      .when(u % 3L === 1L,
+                        struct(concat(s0, litTok, copyO).as("s"),
+                          (off + 1L + lC).as("off"), (tk + 2L).as("tk")))
+                      .otherwise(
+                        struct(concat(s0, litTok, copyP).as("s"),
+                          (off + 1L + pC).as("off"), (tk + 2L).as("tk")))
+                  }
+                },
+                st => concat(lit("LZ1\n"),
+                  chrOf(lit(32L) + floor(st.getField("tk") / 64L)
+                    .cast("long")),
+                  chrOf(lit(32L) + st.getField("tk") % 64L),
+                  st.getField("s")))
+            }
+          }
+        }, "UTF-8").as("payload"))
+  }
+
+  /** The declarative explode/agg form of the
+    * `MultimodalOps.simhashPayloadOf` fingerprint — the A/B witness for
+    * [[graft.functions.Simhash32]]. */
+  def simhashPayloadHofOf(media: DataFrame): DataFrame = {
+    val grams = media
+      .select($"doc_id", $"payload")
+      .filter(length($"payload") >= 4)
+      .select($"doc_id",
+        explode(transform(sequence(lit(1), length($"payload") - 3),
+          i => $"payload".substr(i, lit(4)))).as("g"))
+    val sums = (0 until 32).map(j =>
+      sum(when(shiftright($"hv", j).bitwiseAND(lit(1L)) === 1L, 1)
+        .otherwise(-1)).as(s"s$j"))
+    val bits = (0 until 32)
+      .map(j => when(col(s"s$j") > 0, lit(1L << j)).otherwise(lit(0L)))
+      .reduce(_ + _)
+    val f = grams
+      .select($"doc_id", call_function("md5hash60", $"g").as("hv"))
+      .groupBy($"doc_id").agg(sums.head, sums.tail: _*)
+      .select($"doc_id", bits.as("simhash"))
+    simhashBandPairs(f)
+  }
+
+  /** The pre-round-17 higher-order-function form of
+    * `MultimodalOps.dctHash` — kept verbatim as the A/B witness for the
+    * native expression (the HilbertKey native-equals-fold discipline):
+    * MultimodalOpsSpec pins
+    * `dct_phash(px) ≡ dctHashHof(px)` on decoded corpus rows, so the
+    * native transform can never drift from the oracle-mirrored fold. */
+  def dctHashHof(px: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
+    val clLit = array(DctPpm.map(lit): _*)
+    val p2Lit = array((0 until 63).map(k => lit(1L << k)): _*)
+    bindOnce(transform(sequence(lit(0), lit(63)), i => {
+      val u = shiftright(i, 3)
+      val y = i.bitwiseAND(lit(7))
+      (0 until 8).map(x =>
+        element_at(px, lit(8 * x) + y + 1) *
+          element_at(clLit, u * 8 + lit(x) + 1)).reduce(_ + _)
+    })) { g =>
+      bindOnce(transform(sequence(lit(0), lit(63)), i => {
+        val u = shiftright(i, 3)
+        val v = i.bitwiseAND(lit(7))
+        (0 until 8).map(y =>
+          element_at(g, u * 8 + lit(y) + 1) *
+            element_at(clLit, v * 8 + lit(y) + 1)).reduce(_ + _)
+      })) { f =>
+        bindOnce(aggregate(slice(f, 2, 63), lit(0L), _ + _)) { sumac =>
+          aggregate(sequence(lit(1), lit(63)), lit(0L),
+            (acc, i) => acc + when(element_at(f, i + 1) * 63L > sumac,
+              element_at(p2Lit, i)).otherwise(0L))
+        }
+      }
+    }
+  }
+
+  /** The declarative HOF form of the `MultimodalOps.phashPgmOf`
+    * downsample — the A/B witness for [[graft.functions.BlockMeans64]]. */
+  def phashPgmHofOf(media: DataFrame,
+      hashFn: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
+        dctHash): DataFrame = {
+    val s = decode($"payload", "UTF-8")
+    val hash = bindOnce(struct(
+      regexp_extract(s, "^(P5\\n\\d+ \\d+\\n\\d+\\n)", 1).as("hdr"),
+      regexp_extract(s, PgmPat, 1).as("ws"),
+      regexp_extract(s, PgmPat, 2).as("hs"),
+      s.as("s"))) { c =>
+      val ok = length(c.getField("hdr")) > 0
+      when(ok,
+        bindOnce(struct(
+          c.getField("ws").cast("long").as("w"),
+          c.getField("hs").cast("long").as("h"),
+          shiftright(c.getField("ws").cast("long"), 3).as("wb"),
+          shiftright(c.getField("hs").cast("long"), 3).as("hb"),
+          // split ONCE into a code array: every tile read below is then an
+          // O(1) element_at instead of a substr that re-scans the raster
+          // (measured 14.4 s → see COVERAGE for the split-once number);
+          // round-17: native ascii_codes — long elements, no per-char
+          // single-character strings
+          call_function("ascii_codes",
+            c.getField("s").substr(length(c.getField("hdr")) + 1,
+              length(c.getField("s")))).as("rc"))) { d =>
+          val w = d.getField("w")
+          val wb = d.getField("wb")
+          val hb = d.getField("hb")
+          val rc = d.getField("rc")
+          bindOnce(transform(sequence(lit(0L), lit(63L)), i => {
+            val u = shiftright(i, 3)
+            val v = i.bitwiseAND(lit(7L))
+            val cnt = hb * wb
+            // block mean: sum over the hb×wb tile, then exact integer DIV
+            // (sums < 2^11, doubles exact — floor is engine-safe here)
+            floor(aggregate(sequence(lit(0L), cnt - 1), lit(0L), (acc, a) =>
+              acc + element_at(rc,
+                (((u * hb + floor(a / wb).cast("long")) * w
+                  + v * wb + (a % wb)) + 1).cast("int")))
+              / cnt).cast("long")
+          })) { px => hashFn(px) }
+        })
+    }
+    media.select($"doc_id", hash.as("phash"))
   }
 }
