@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 
 /** Registry for intra-query `persist()` calls (the similarity/langid ops
   * persist small derived tables that feed multiple consumers within ONE
@@ -24,7 +26,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Caches {
   private final class Scope {
     val dfs = scala.collection.mutable.Buffer.empty[DataFrame]
-    val rdds = scala.collection.mutable.Buffer.empty[org.apache.spark.rdd.RDD[_]]
+    val rdds = scala.collection.mutable.Buffer.empty[RDD[_]]
   }
 
   /** Innermost-scope stack, one per thread: thread confinement is the
@@ -41,71 +43,77 @@ object Caches {
     df.persist()
   }
 
-  /** Eagerly localCheckpoint `df` — materialize it and TRUNCATE its lineage
-    * (iterative algorithms like label propagation otherwise grow the
-    * logical plan exponentially: each round references the previous round's
-    * plan several times) — and track the backing checkpoint RDD so
-    * [[release]] frees its blocks like any other registration. On a real
-    * cluster a reliable `checkpoint()` to durable storage would be the
-    * executor-loss-safe variant; the truncation role is identical.
+  /** A materialized checkpoint: the stat-less leaf, the RDD backing it,
+    * and what its one materializing job counted. */
+  private final case class Checkpoint(df: DataFrame,
+      rdd: RDD[InternalRow], rows: Long, sum: Long)
+
+  /** The one checkpoint construction behind [[localCheckpoint]], its
+    * fused forms and [[memoSeq]] — `Dataset.localCheckpoint`'s own steps
+    * (copy rows → mark the RDD local-checkpointed → materialize in one
+    * job → wrap the RDD as a fresh leaf), with two differences:
     *
-    * The checkpointed frame is then REBUILT WITHOUT the origin statistics
-    * `Dataset.localCheckpoint` carries over: those stats are the truncated
-    * plan's `sizeInBytes`, so in a loop they COMPOUND (k plan references →
-    * ~k× the DIGITS per round; measured 182k-digit BigInts by round 10 of
-    * a 3-reference loop) and Catalyst's size-only stats visitor ends up
-    * multiplying astronomical BigIntegers on every broadcast-size probe —
-    * in `geo_msf` (nested iteration) planning alone cost 20+ minutes at
-    * sf0.1. Stat-less loop state instead relies on explicit `broadcast()`
-    * hints and AQE runtime sizes — the correct sizing authority for
-    * iterative state anyway. See [[org.apache.spark.sql.GraftShim]]. */
-  def localCheckpoint(df: DataFrame): DataFrame = {
-    val cp = df.localCheckpoint()
-    cp.queryExecution.logical match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        scopes.get.head.rdds += l.rdd
-      case _ => ()
-    }
-    org.apache.spark.sql.GraftShim.withoutOriginStats(cp)
-  }
-
-  /** [[localCheckpoint]] FUSED with the loop's convergence row count, in
-    * ONE job (round-18, guide §1.2 "don't compute things twice"): every
-    * counted fixpoint loop here ran two jobs per round — the eager
-    * checkpoint's internal materialization pass and then a `count()` over
-    * the materialized blocks. At bench SF the second job is a pure fixed
-    * cost (~80 ms × 20-30 rounds × a dozen iterative lanes); at cluster
-    * scale it is a full extra pass over the loop state. This is
-    * `Dataset.localCheckpoint`'s own construction (copy rows → mark
-    * checkpoint → count to materialize → wrap the RDD as a fresh leaf)
-    * with the materializing count RETURNED instead of discarded, and the
-    * leaf built stat-less per the [[localCheckpoint]] rationale. */
-  def localCheckpointCount(df: DataFrame): (DataFrame, Long) = {
-    val rdd = df.queryExecution.toRdd.map(_.copy())
-    rdd.localCheckpoint()
-    val n = rdd.count()
-    scopes.get.head.rdds += rdd
-    (org.apache.spark.sql.GraftShim.fromInternalRows(
-      df.sparkSession, rdd, df.schema), n)
-  }
-
-  /** [[localCheckpointCount]] additionally returning Σ of one BIGINT
-    * column — the monotone-sum fixpoint witness of the coloring/depth
-    * loops — still in the single materializing job. The column must be a
-    * non-null LongType (every convergence accumulator here is). */
-  def localCheckpointCountSum(df: DataFrame, sumCol: String)
-      : (DataFrame, Long, Long) = {
-    val i = df.schema.fieldIndex(sumCol)
+    *  - the materializing job RETURNS the row count and, for `sumCol`, Σ
+    *    of that column (a non-null LongType — every convergence
+    *    accumulator here is), so a counted fixpoint loop pays one job per
+    *    round instead of a checkpoint pass plus a `count()`;
+    *  - the leaf is built WITHOUT the origin statistics
+    *    `Dataset.localCheckpoint` carries over. Those stats are the
+    *    truncated plan's `sizeInBytes`, so in a loop they COMPOUND (k plan
+    *    references → ~k× the DIGITS per round; measured 182k-digit
+    *    BigInts by round 10 of a 3-reference loop) and Catalyst's
+    *    size-only stats visitor ends up multiplying astronomical
+    *    BigIntegers on every broadcast-size probe — in `geo_msf` (nested
+    *    iteration) planning alone cost 20+ minutes at sf0.1. Stat-less
+    *    loop state relies on explicit `broadcast()` hints and AQE runtime
+    *    sizes instead — the correct sizing authority for iterative state.
+    *
+    * Truncating lineage is the point: iterative algorithms like label
+    * propagation otherwise grow the logical plan exponentially (each
+    * round references the previous round's plan several times). On a real
+    * cluster a reliable `checkpoint()` to durable storage would be the
+    * executor-loss-safe variant; the truncation role is identical. The
+    * caller decides who frees the returned RDD. */
+  private def checkpoint(df: DataFrame,
+      sumCol: Option[String] = None): Checkpoint = {
+    val i = sumCol.fold(-1)(df.schema.fieldIndex)
     val rdd = df.queryExecution.toRdd.map(_.copy())
     rdd.localCheckpoint()
     val (n, s) = rdd.mapPartitions { it =>
       var n = 0L; var s = 0L
-      it.foreach { r => n += 1L; s += r.getLong(i) }
+      it.foreach { r => n += 1L; if (i >= 0) s += r.getLong(i) }
       Iterator((n, s))
     }.fold((0L, 0L))((a, b) => (a._1 + b._1, a._2 + b._2))
-    scopes.get.head.rdds += rdd
-    (org.apache.spark.sql.GraftShim.fromInternalRows(
-      df.sparkSession, rdd, df.schema), n, s)
+    Checkpoint(GraftShim.fromInternalRows(df.sparkSession, rdd, df.schema),
+      rdd, n, s)
+  }
+
+  /** [[checkpoint]] with its RDD tracked in the calling thread's innermost
+    * scope, so [[release]] frees its blocks like any other registration. */
+  private def scopedCheckpoint(df: DataFrame,
+      sumCol: Option[String] = None): Checkpoint = {
+    val c = checkpoint(df, sumCol)
+    scopes.get.head.rdds += c.rdd
+    c
+  }
+
+  /** Eagerly checkpoint `df` (materialize it, truncate its lineage, drop
+    * its origin statistics — see [[checkpoint]]) until the next
+    * [[release]]. */
+  def localCheckpoint(df: DataFrame): DataFrame = scopedCheckpoint(df).df
+
+  /** [[localCheckpoint]] also returning its row count, from the same
+    * single job — the convergence count of a fixpoint loop. */
+  def localCheckpointCount(df: DataFrame): (DataFrame, Long) = {
+    val c = scopedCheckpoint(df); (c.df, c.rows)
+  }
+
+  /** [[localCheckpointCount]] also returning Σ of the non-null BIGINT
+    * column `sumCol` — the monotone-sum fixpoint witness of the
+    * coloring/depth loops — still from the single job. */
+  def localCheckpointCountSum(df: DataFrame, sumCol: String)
+      : (DataFrame, Long, Long) = {
+    val c = scopedCheckpoint(df, Some(sumCol)); (c.df, c.rows, c.sum)
   }
 
   /** Unpersist everything the calling thread registered since its last
@@ -135,9 +143,9 @@ object Caches {
 
   // ------------------------------------------------- cross-query memo
 
-  /** (key, frames, RDDs the build left persisted) per memo name. */
+  /** (key, frames, the RDDs backing them) per memo name. */
   private val memos = scala.collection.mutable.Map
-    .empty[String, (String, Seq[DataFrame], Seq[org.apache.spark.rdd.RDD[_]])]
+    .empty[String, (String, Seq[DataFrame], Seq[RDD[_]])]
 
   /** A frame computed ONCE and shared across REGISTRY QUERIES — the seam
     * the per-query [[release]] contract deliberately cannot express.
@@ -149,9 +157,9 @@ object Caches {
     *
     * Semantics: `build` runs inside a fresh [[scoped]] block (its
     * intra-construction persists release immediately) and the survivor is
-    * an EAGER `localCheckpoint` — materialized, lineage-free blocks — so
-    * releasing the construction's caches afterwards cannot strand a lazy
-    * plan. The result is stat-less per the [[localCheckpoint]] rationale.
+    * an EAGER [[checkpoint]] — materialized, lineage-free, stat-less
+    * blocks — so releasing the construction's caches afterwards cannot
+    * strand a lazy plan. The memo tracks the checkpointed RDDs itself.
     * Memoization is sound only because every memoized build is a
     * DETERMINISTIC function of its key: callers key on the input dir, and
     * [[memoSeq]] prefixes the active SparkContext's application id, so a
@@ -173,7 +181,7 @@ object Caches {
     * re-ran the identical 4-round training loop — the curve, weight and
     * score frames are one training run's outputs, so memoizing them
     * separately would re-train per frame). Every output is an eager
-    * stat-less localCheckpoint, with one `buildSecs` entry under `name`.
+    * [[checkpoint]], with one `buildSecs` entry under `name`.
     * Outputs must be model/doc-thin (never corpus-payload-sized) like
     * every other memo. */
   def memoSeq(name: String, key: String)(build: => Seq[DataFrame])
@@ -183,28 +191,16 @@ object Caches {
       case Some((k, dfs, _)) if k == sessionKey => dfs
       case prev =>
         prev.foreach(_._3.foreach(_.unpersist(blocking = false)))
-        // the backing blocks are tracked as the PERSISTED-RDD DELTA of
-        // the checkpoint step (a localCheckpoint can pin more than the
-        // final LogicalRDD), so a key change can drop every block the
-        // stale frames hold
-        var before: Set[Int] = Set.empty
         val t0 = System.nanoTime()
-        val dfs = scoped {
-          val built = build
-          before = built.head.sparkSession.sparkContext
-            .getPersistentRDDs.keySet.toSet
-          built.map(df => org.apache.spark.sql.GraftShim.withoutOriginStats(
-            df.localCheckpoint()))
-        }
+        val cps = scoped(build.map(checkpoint(_)))
         buildSecs(name) = (System.nanoTime() - t0) / 1e9
-        val after = dfs.head.sparkSession.sparkContext.getPersistentRDDs
-        val mine = (after.keySet -- before).toSeq.sorted.map(after(_))
-        memos(name) = (sessionKey, dfs, mine)
+        val dfs = cps.map(_.df)
+        memos(name) = (sessionKey, dfs, cps.map(_.rdd))
         dfs
     }
   }
 
-  /** Wall seconds each memo's build (including its localCheckpoint
+  /** Wall seconds each memo's build (including its checkpoint
     * materialization) cost, by name — the round-14 verdict's "memo
     * economics" auditability item: timed bench values exclude shared
     * builds (they run in whichever lane first touches the memo, i.e. its

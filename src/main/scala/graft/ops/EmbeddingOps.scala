@@ -586,8 +586,8 @@ object EmbeddingOps {
     * `(cell, cv, cnrm)`, final assignment `(vec_id, v, nrm, cell)`).
     * Both the tiny centroid table and the corpus assignment are
     * localCheckpointed every round (each is referenced by the next
-    * round's update AND a summary aggregate — the `clusterOf` lineage
-    * rule). Scale shape per round: one corpus pass for the quantized-mean
+    * round's update AND a summary aggregate — the lineage rule for
+    * multiply-referenced loop state). Scale shape per round: one corpus pass for the quantized-mean
     * update (shuffle keyed (cell, dim)), one broadcast re-assignment pass
     * — learned state never shuffles with the corpus, and the broadcast is
     * bounded by [[MaxBroadcastCells]]. */
@@ -1940,7 +1940,7 @@ object EmbeddingOps {
         .select($"q_id", $"a".as("vec_id"),
           floor(($"sim" * lit(MmrLambda) - $"ms" * lit(1 - MmrLambda))
             * 1000000.0 + lit(0.5)).cast("long").as("mmr_e6"))
-      // eager localCheckpoint per round (the clusterOf discipline): sel is
+      // eager localCheckpoint per round (the lineage rule): sel is
       // referenced three times next round (anti-join, redundancy join,
       // union), so without lineage truncation the plan re-executes the
       // earlier rounds 3^r times
@@ -2833,8 +2833,8 @@ object EmbeddingOps {
     * convergence computes exactly the four per-ef fixpoints for a quarter
     * of the jobs. Stability per round: the fused checkpoint's free
     * node-id sum is the fast path (set-equal ⇒ sum-equal), and the exact
-    * anti-join confirmation runs only on rounds whose sums already match
-    * — the [[LlmTextOps.clusterOf]] discipline. Returns (ef, q_id, node,
+    * anti-join confirmation runs only on rounds whose sums already match,
+    * so a sum collision can never end the loop early. Returns (ef, q_id, node,
     * s), checkpointed. */
   private def beamFixpointMulti(nodes: DataFrame,
       layerEdges: Map[Int, DataFrame], q: DataFrame, state0: DataFrame,

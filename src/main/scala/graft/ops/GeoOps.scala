@@ -30,9 +30,9 @@ import graft.io.Tables
   * shift-explode, and exact distance runs on grid-candidates only. A pair
   * at most one cell apart matches in exactly one (shift, home) combination
   * per orientation, so `id1 < id2` alone dedups — no DISTINCT pass. The
-  * cluster op feeds those pairs to the shared pointer-jumping CC
-  * ([[LlmTextOps.clusterOf]]) — O(log diameter) rounds, the same machinery
-  * the dedup lane ships.
+  * cluster op feeds those pairs to the shared connected-components kernel
+  * ([[LlmTextOps.clusterLsOf]]) — O(log n) rounds, the same machinery the
+  * dedup lanes ship.
   */
 object GeoOps {
 
@@ -175,7 +175,7 @@ object GeoOps {
   /** Spatial connected clusters: customers chained by ≤2° hops share a
     * cluster (single-linkage — the transitive closure a pairwise radius
     * query can't see, same argument as the dedup clusters). Pairs come
-    * from the grid join; labels from the shared pointer-jumping CC. The
+    * from the grid join; labels from [[LlmTextOps.clusterLsOf]]. The
     * oracle replays the closure as a recursive CTE over the quadratic
     * pair predicate. */
   val cluster: QueryDef = QueryDef(
@@ -196,15 +196,12 @@ object GeoOps {
        |SELECT id AS c_custkey, min(r) AS cluster_id
        |FROM reach GROUP BY id ORDER BY c_custkey""".stripMargin,
   ) { (spark, dir) =>
-    // large-star/small-star, NOT the min-label+jump CC: on a spatial
-    // proximity graph the min label spreads ~one CELL per round (pointer
-    // chains stay spatially local, so the jump can't shortcut), making
-    // min-label rounds ~ the spatial diameter — measured 58 rounds on a
-    // 20k-point RGG and non-convergence at the 48-round cap on the 150k
-    // sf1 rehearsal. Star contraction rewires edges instead and closed the
-    // same 60k-point RGG in 8 rounds (simulated; O(log² n) proven). Output
-    // contract and oracle are identical — membership is
-    // algorithm-independent.
+    // large-star/small-star: on a spatial proximity graph min-label
+    // propagation (even with label-of-label jumps) spreads ~one CELL per
+    // round — measured 58 rounds on a 20k-point RGG and non-convergence at
+    // a 48-round cap on the 150k sf1 rehearsal. Star contraction rewires
+    // edges instead and closed the same 60k-point RGG in 8 rounds
+    // (simulated; O(log² n) proven).
     val pts = graft.Caches.persist(points(spark, dir))
     LlmTextOps.clusterLsOf(
       pairsOf(pts).select($"k1".as("doc_a"), $"k2".as("doc_b")),
@@ -220,7 +217,8 @@ object GeoOps {
     * forest UNIQUE — the classic lexicographic-perturbation argument, so
     * the spec's driver-side Kruskal must produce the identical edge set),
     * all picked edges join the forest at once, and touching components
-    * contract via the shared pointer-jumping CC. Components at least
+    * contract by pointer jumping over the picked edges' parent pointers
+    * (one per component). Components at least
     * halve per round → ⌈log₂ n⌉ rounds of small keyed joins; nothing in
     * the loop is ever quadratic — candidate edges come from the same grid
     * join as `geo_grid_pairs`.

@@ -10,7 +10,7 @@ import graft.io.Tables
 /** Declarative graph analytics over the part co-occurrence graph (nodes =
   * parts, edge = two parts sharing >1 distinct order — the same support
   * threshold the reference's recommender mines, `a1_cooccur_pairs`).
-  * Distributed connected components already live in `LlmTextOps.clusterOf`;
+  * Distributed connected components live in `LlmTextOps.clusterLsOf`;
   * this adds the other two staples — triangle enumeration and degree
   * distribution — as plain relational plans.
   *
@@ -123,7 +123,8 @@ object GraphOps {
     * (measured 11.4 s → ~5.7 s at sf0.1). With dangling nodes the ranks
     * are referenced twice per round (contributions + dangling-mass sum),
     * which would double the logical plan each round — so that path
-    * truncates every round, exactly as `LlmTextOps.clusterOf` does. */
+    * truncates every round (the lineage rule: loop state referenced more
+    * than once per round is checkpointed every round). */
   private[graft] def pageRankOf(edges: DataFrame, iters: Int): DataFrame = {
     // Round-17: rank loop at the edge frame's materialized width
     // ([[loopParts]]) — same task-launch-overhead finding as [[hitsOf]];
@@ -319,39 +320,56 @@ object GraphOps {
       .limit(20)
   }
 
-  /** BFS levels from a source over a directed edge list: round h joins the
-    * frontier to the edges, dedups, anti-joins the visited set, and tags
-    * survivors with level h — one edge-keyed equi-join + one anti-join per
-    * hop, the frontier-expansion shape that holds on any cluster (state is
-    * the visited set, never paths — no path explosion). The visited set is
-    * referenced twice per round (anti-join + union), so lineage is
-    * truncated every round like `clusterOf`. Source = the minimum src id
-    * (deterministic; callers pass both orientations for undirected
-    * graphs). */
-  private[graft] def bfsLevelsOf(edges: DataFrame, maxHops: Int): DataFrame = {
+  /** Multi-source BFS over a directed (src, dst) edge list — the one
+    * frontier kernel behind the BFS, diameter, closeness and harmonic
+    * lanes. `seeds` holds (lm, id) start rows, one BFS per distinct `lm`;
+    * the result is every (lm, id) reached within `maxHops` with its hop
+    * distance `d` (seeds at 0).
+    *
+    * Round h joins the frontier to the src-partitioned cached edge list,
+    * dedups per source, anti-joins that source's visited set and tags the
+    * survivors with h — one edge-keyed equi-join + one anti-join per hop,
+    * the frontier-expansion shape that holds on any cluster (state is
+    * k·|V| visited pairs, never paths). The visited set is referenced
+    * twice per round (anti-join + union), so lineage is truncated every
+    * round; each frontier checkpoint also counts its rows in the same job,
+    * and an empty frontier ends the loop early. Callers pass both
+    * orientations for undirected graphs. */
+  private[graft] def bfsOf(edges: DataFrame, seeds: DataFrame,
+      maxHops: Int): DataFrame =
     // Round-17: frontier rounds at the edge frame's materialized width
     // ([[loopParts]] — the task-launch-overhead fix, values unchanged).
     withLoopWidth(edges.sparkSession, loopParts(edges)) {
-    val e = graft.Caches.persist(edges.select($"src", $"dst"))
-    var visited = graft.Caches.localCheckpoint(
-      e.agg(min($"src").as("id")).select($"id", lit(0L).as("level")))
-    var frontier = visited.select($"id")
-    for (h <- 1 to maxHops) {
-      val nf = graft.Caches.localCheckpoint(
-        e.join(frontier.select($"id".as("src")), "src")
-          .select($"dst".as("id")).distinct()
-          .join(visited, Seq("id"), "left_anti")
-          .select($"id", lit(h.toLong).as("level")))
-      visited = graft.Caches.localCheckpoint(visited.unionAll(nf))
-      frontier = nf.select($"id")
+      val e = graft.Caches.persist(
+        edges.select($"src", $"dst").repartition($"src"))
+      var (visited, n) = graft.Caches.localCheckpointCount(
+        seeds.select($"lm", $"id", lit(0L).as("d")))
+      var frontier = visited.select($"lm", $"id")
+      var h = 1
+      while (n > 0 && h <= maxHops) {
+        val (nf, nNf) = graft.Caches.localCheckpointCount(
+          e.join(frontier.select($"lm", $"id".as("src")), "src")
+            .select($"lm", $"dst".as("id")).distinct()
+            .join(visited.select($"lm", $"id"), Seq("lm", "id"), "left_anti")
+            .select($"lm", $"id", lit(h.toLong).as("d")))
+        n = nNf
+        if (n > 0) visited = graft.Caches.localCheckpoint(visited.unionAll(nf))
+        frontier = nf.select($"lm", $"id")
+        h += 1
+      }
+      visited
     }
-    visited
-    }
-  }
+
+  /** BFS levels (id, level) from the minimum src id of a directed edge
+    * list — [[bfsOf]] from that one deterministic seed. */
+  private[graft] def bfsLevelsOf(edges: DataFrame, maxHops: Int): DataFrame =
+    bfsOf(edges,
+      edges.agg(min($"src").as("id")).select($"id".as("lm"), $"id"), maxHops)
+      .select($"id", $"d".as("level"))
 
   /** 3-hop BFS neighborhood of the co-occurrence graph's minimum part id —
     * single-source shortest hop-distances, the graph staple next to
-    * components ([[LlmTextOps.clusterOf]]), PageRank, and triangles. The
+    * components ([[LlmTextOps.clusterLsOf]]), PageRank, and triangles. The
     * DuckDB twin unrolls the same frontier expansion level by level
     * (NOT-IN visited = the anti-join), so hop distances are value-checked
     * exactly. */
@@ -608,7 +626,7 @@ object GraphOps {
     * peel depth — empirically logarithmic on co-occurrence-like graphs
     * (11 rounds at sf0.01, k=3), worst-case linear on adversarial chains.
     * Hitting the cap throws rather than returning a superset of the core
-    * (the `clusterOf` loud-failure convention). */
+    * (the loud-failure convention of every capped loop here). */
   private val MaxPeelRounds = 64
 
   /** k-core membership by parallel peeling: repeatedly delete all
@@ -618,7 +636,7 @@ object GraphOps {
     * victim set — never a pair expansion; the victim table is a bounded
     * fraction of the vertex set. Loop state is localCheckpointed every
     * round (the prior edge set is referenced by the degree agg AND the
-    * anti-joins — the `clusterOf` lineage rule); the driver holds only
+    * anti-joins — the lineage rule); the driver holds only
     * edge counts. Deletion is monotone, so an unchanged edge count IS the
     * fixpoint. */
   private[graft] def kcoreOf(edges: DataFrame, k: Int): DataFrame = {
@@ -994,7 +1012,7 @@ object GraphOps {
     * in both engines. Scale shape: two edge equi-joins + two node
     * aggregates per round, state = one double per node; scores are
     * referenced twice per half-round (contributions + total), so lineage
-    * truncates every round (the `clusterOf` rule). */
+    * truncates every round (the lineage rule). */
   private[graft] def hitsOf(edges: DataFrame, iters: Int): DataFrame = {
     // HITS joins the edge table on BOTH endpoints (src for the auth
     // half-round, dst for the hub half-round), so cache one copy aligned
@@ -1168,7 +1186,7 @@ object GraphOps {
     * the jump table maps each node to its 2^k-th ancestor, so a depth-d
     * hierarchy closes in ⌈log₂ d⌉ keyed joins instead of the d rounds of
     * the naive parent-at-a-time walk (the BOM-explosion classic; same
-    * O(log) discipline as `llm_dedup_cluster`'s pointer jumping). Distances
+    * O(log) discipline as `llm_dedup_cluster`'s star contraction). Distances
     * are unique per (des, anc) pair, so no round produces duplicates and no
     * DISTINCT is needed. Closure size is n·depth rows — for a balanced
     * hierarchy n·log n, the irreducible cost of reporting EVERY node's
@@ -1353,7 +1371,7 @@ object GraphOps {
     * no path explosion at any scale; rounds beyond the graph's weighted
     * diameter are no-ops. Distance state is referenced twice per round
     * (relax join + union), so lineage truncates per round like
-    * [[bfsLevelsOf]]. */
+    * [[bfsOf]]. */
   private[graft] def ssspOf(edges: DataFrame, rounds: Int): DataFrame = {
     // Round-17: relaxation rounds at the edge frame's materialized width
     // ([[loopParts]] — the task-launch-overhead fix, values unchanged).
@@ -1610,25 +1628,14 @@ object GraphOps {
         .repartition($"v"))
     val deg = graft.Caches.persist(und.groupBy($"u").agg(sum($"w").as("dg")))
     val wEdges = if (skipSelf) und.filter($"u" =!= $"v") else und
-    // phase/round accounting for the perf probe (GRAFT_LOUVAIN_DEBUG=1):
-    // the sf10 scale question is whether the ×3.5-3.9/decade shape is
-    // round count (fixed here) or per-round edge/candidate volume —
-    // counts are extra actions, so they run only under the flag
-    val dbg = sys.env.contains("GRAFT_LOUVAIN_DEBUG")
-    def ph(tag: String, extra: => String = ""): Unit =
-      if (dbg) println(s"[louvain] $tag $extra")
-    if (dbg) ph("edges", s"und=${und.count()} deg=${deg.count()}")
     var cm = graft.Caches.localCheckpoint(
       deg.select($"u".as("node"), $"u".as("comm")))
     for (r <- 1 to rounds) {
-      val t0 = System.nanoTime()
       val tot = cm.join(deg, $"node" === $"u")
         .groupBy($"comm").agg(sum($"dg").as("tot"))
       val wnc = wEdges
         .join(cm.select($"node".as("v"), $"comm".as("cand")), "v")
         .groupBy($"u", $"cand").agg(sum($"w").as("wuc"))
-      if (dbg) ph(s"round=$r", s"cands=${wnc.count()} " +
-        f"tsofar=${(System.nanoTime() - t0) / 1e9}%.2f")
       val cand = wnc
         .unionAll(cm.select($"node".as("u"), $"comm".as("cand"),
           lit(0L).as("wuc")))
@@ -1649,8 +1656,6 @@ object GraphOps {
           .select($"u".as("node"),
             when($"u" % 2 === lit(r % 2), $"cand").otherwise($"own")
               .as("comm")))
-      if (dbg) ph(s"round=$r done",
-        f"t=${(System.nanoTime() - t0) / 1e9}%.2f")
     }
     cm
     }
@@ -1915,22 +1920,13 @@ object GraphOps {
     * node-keyed max, the [[pageRankOf]] shape, with same-class edges
     * cached pre-partitioned on the walk key for the confirm loop. Loop
     * state is localCheckpointed per round (each frame is referenced
-    * multiple times per round — the `clusterOf` lineage rule).
+    * multiple times per round — the lineage rule).
     *
     * Output ids are normalized to the MINIMUM member (the [[components]]
     * convention), so labels are engine-independent. */
   private[graft] def sccOf(edges0: DataFrame): DataFrame = {
     import graft.Caches.{localCheckpoint, localCheckpointCount,
       localCheckpointCountSum, persist}
-    // phase/round accounting for the perf probe (GRAFT_SCC_DEBUG=1):
-    // stderr-only, zero cost when unset
-    val dbg = sys.env.contains("GRAFT_SCC_DEBUG")
-    var phT = System.nanoTime()
-    def ph(tag: String, extra: => String = ""): Unit = if (dbg) {
-      val now = System.nanoTime()
-      System.err.println(f"[scc] $tag ${(now - phT) / 1e9}%.2f s $extra")
-      phT = now
-    }
     // Round-18: every counted checkpoint in this function is the FUSED
     // one-job form (materialize + convergence statistic together — see
     // [[graft.Caches.localCheckpointCount]]); the loops below ran 2-3
@@ -1938,10 +1934,10 @@ object GraphOps {
     var (e, nE) = localCheckpointCount(edges0.select($"src", $"dst").distinct())
     // every endpoint id, fixed ONCE: singleton SCCs (every trim casualty)
     // are derived at the very end as allNodes ∖ confirmed-members, so the
-    // trim loop below never maintains a node frame or a done union — the
-    // GRAFT_SCC_DEBUG probe measured the old per-round bookkeeping
-    // (trimmed-set + node-set + done-union checkpoints, ~4 actions/round
-    // over 24+8 peel rounds) at over half the trim phase's 16 s.
+    // trim loop below never maintains a node frame or a done union — a
+    // per-phase timing put the old per-round bookkeeping (trimmed-set +
+    // node-set + done-union checkpoints, ~4 actions/round over 24+8 peel
+    // rounds) at over half the trim phase's 16 s.
     val allNodes = localCheckpoint(
       e.select($"src".as("id")).union(e.select($"dst".as("id"))).distinct())
     // confirmed (id, root) parts; seeded with an empty frame so a
@@ -1983,7 +1979,6 @@ object GraphOps {
       }
       if (trimming) throw new IllegalStateException(
         s"sccOf trim did not stabilize in $MaxSccInner rounds")
-      ph(s"outer=$outer trim", s"rounds=$t edges=$nE")
       if (nE > 0) {
         // the surviving node set: at the trim fixpoint every src is also
         // a dst and vice versa, so srcs ∩ dsts = distinct srcs — one
@@ -2007,7 +2002,6 @@ object GraphOps {
         }
         if (!stable) throw new IllegalStateException(
           s"sccOf coloring did not stabilize in $MaxSccInner rounds")
-        ph(s"outer=$outer color", s"rounds=$r")
         // 3) backward confirmation within color classes
         val sameClass = persist(
           e.join(c.select($"id".as("src"), $"c".as("cs")), "src")
@@ -2031,7 +2025,6 @@ object GraphOps {
         }
         if (!stable) throw new IllegalStateException(
           s"sccOf confirmation did not stabilize in $MaxSccInner rounds")
-        ph(s"outer=$outer confirm", s"rounds=$r confirmed=$nM")
         confirmedParts += m.select($"id", $"c".as("root"))
         val (e3, nE3) = localCheckpointCount(
           e.join(m.select($"id".as("src")), Seq("src"), "left_anti")
@@ -2105,6 +2098,16 @@ object GraphOps {
   // deepens the graph fails the spec, not the oracle compare (round-13)
   private[graft] val ClosenessMaxHops = 24
 
+  /** The (lm, id = lm) seed frame of the `nLm` landmark sources of a
+    * directed (src, dst) edge list: the src ids with the smallest
+    * portable-md5 (`md5hash60`), ties to the smaller id — a
+    * deterministic uniform sample both engines reproduce. */
+  private def landmarkSeeds(edges: DataFrame, nLm: Int): DataFrame =
+    edges.select($"src".as("id")).distinct()
+      .orderBy(call_function("md5hash60", $"id".cast("string")), $"id")
+      .limit(nLm)
+      .select($"id".as("lm"), $"id")
+
   /** Landmark closeness centrality: exact BFS distances from [[ClosenessLandmarks]]
     * hash-chosen landmark nodes (smallest portable-md5 of the id — a
     * deterministic uniform sample), aggregated per node into the standard
@@ -2114,48 +2117,12 @@ object GraphOps {
     * on BOTH engines (true landmark eccentricity at sf0.01 is 11, so the
     * cap is slack, not truncation).
     *
-    * Scale shape: ONE multi-source BFS carrying (landmark, node) pairs —
-    * state k·|V|, frontier expansion an equi-join against the
-    * src-partitioned cached edge list, rounds = eccentricity. The ppm
-    * division is exact integer arithmetic, so rows hash-match. */
-  /** Exact BFS distance table (lm, id, d) from [[ClosenessLandmarks]]
-    * hash-chosen landmark sources — the k·|V| frame [[closenessOf]] and
-    * [[harmonicOf]] aggregate differently. */
-  private def landmarkDistances(edges: DataFrame, nLm: Int,
-      maxHops: Int): DataFrame = {
-    // Round-17: the multi-source BFS runs at the edge frame's
-    // materialized width ([[loopParts]] — task-launch overhead fix).
-    withLoopWidth(edges.sparkSession, loopParts(edges)) {
-    val e = graft.Caches.persist(
-      edges.select($"src", $"dst").repartition($"src"))
-    val lms = e.select($"src".as("id")).distinct()
-      .orderBy(call_function("md5hash60", $"id".cast("string")), $"id")
-      .limit(nLm)
-      .select($"id".as("lm"))
-    var visited = graft.Caches.localCheckpoint(
-      lms.select($"lm", $"lm".as("id"), lit(0L).as("d")))
-    var frontier = visited.select($"lm", $"id")
-    var h = 1
-    var n = frontier.count()
-    while (n > 0 && h <= maxHops) {
-      // Round-18: fused checkpoint+count — one job per hop.
-      val (nf, nNf) = graft.Caches.localCheckpointCount(
-        e.join(frontier.select($"lm", $"id".as("src")), "src")
-          .select($"lm", $"dst".as("id")).distinct()
-          .join(visited.select($"lm", $"id"), Seq("lm", "id"), "left_anti")
-          .select($"lm", $"id", lit(h.toLong).as("d")))
-      n = nNf
-      if (n > 0) visited = graft.Caches.localCheckpoint(visited.unionAll(nf))
-      frontier = nf.select($"lm", $"id")
-      h += 1
-    }
-    visited
-    }
-  }
-
+    * Scale shape: ONE multi-source [[bfsOf]] carrying (landmark, node)
+    * pairs — state k·|V|, rounds = eccentricity. The ppm division is
+    * exact integer arithmetic, so rows hash-match. */
   private[graft] def closenessOf(edges: DataFrame, nLm: Int,
       maxHops: Int): DataFrame =
-    landmarkDistances(edges, nLm, maxHops).groupBy($"id")
+    bfsOf(edges, landmarkSeeds(edges, nLm), maxHops).groupBy($"id")
       .agg(count(lit(1)).as("n_lm"), sum($"d").as("sum_d"))
       .select($"id".as("node"), $"n_lm", $"sum_d",
         when($"sum_d" > 0, expr("n_lm * 1000000 DIV sum_d"))
@@ -2195,7 +2162,7 @@ object GraphOps {
   /** [[harmonic]] over any directed (src, dst) edge list — fixture seam. */
   private[graft] def harmonicOf(edges: DataFrame, nLm: Int,
       maxHops: Int): DataFrame =
-    landmarkDistances(edges, nLm, maxHops).groupBy($"id")
+    bfsOf(edges, landmarkSeeds(edges, nLm), maxHops).groupBy($"id")
       .agg(count(lit(1)).as("n_lm"),
         sum(when($"d" > 0, expr("1000000 DIV d")).otherwise(0L))
           .as("harmonic_ppm"))
@@ -2233,13 +2200,9 @@ object GraphOps {
     withLoopWidth(edges.sparkSession, loopParts(edges)) {
     val e = graft.Caches.persist(
       edges.select($"src", $"dst").repartition($"src"))
-    val lms = e.select($"src".as("id")).distinct()
-      .orderBy(call_function("md5hash60", $"id".cast("string")), $"id")
-      .limit(nLm)
-      .select($"id".as("lm"))
     // forward sweep: visited rows are (lm, id, d, sig)
-    var visited = graft.Caches.localCheckpoint(
-      lms.select($"lm", $"lm".as("id"), lit(0L).as("d"), lit(1L).as("sig")))
+    var visited = graft.Caches.localCheckpoint(landmarkSeeds(e, nLm)
+      .select($"lm", $"id", lit(0L).as("d"), lit(1L).as("sig")))
     var frontier = visited
     var h = 1
     var n = frontier.count()
@@ -2634,46 +2597,18 @@ object GraphOps {
       .unionAll(und.select($"p2".as("src"), $"p1".as("dst"))))
   }
 
-  /** One BFS distance frame (id, d) from an explicit 1-row source. */
-  private def bfsFrom(e: DataFrame, src: DataFrame, maxHops: Int): DataFrame = {
-    import graft.Caches.localCheckpoint
-    var visited = localCheckpoint(src.select($"id", lit(0L).as("d")))
-    var frontier = visited.select($"id")
-    var h = 1
-    var n = frontier.count()
-    while (n > 0 && h <= maxHops) {
-      // Round-18: fused checkpoint+count — one job per hop.
-      val (nf, nNf) = graft.Caches.localCheckpointCount(
-        e.join(frontier.select($"id".as("src")), "src")
-          .select($"dst".as("id")).distinct()
-          .join(visited.select($"id"), Seq("id"), "left_anti")
-          .select($"id", lit(h.toLong).as("d")))
-      n = nNf
-      if (n > 0) visited = localCheckpoint(visited.unionAll(nf))
-      frontier = nf.select($"id")
-      h += 1
-    }
-    visited
-  }
-
   /** [[diameter]] over any directed (src, dst) edge list — fixture seam. */
   private[graft] def diameterOf(edges: DataFrame): DataFrame = {
-    val e = graft.Caches.persist(
-      edges.select($"src", $"dst").repartition($"src"))
-    val start = e.agg(min($"src").as("id"))
-    def far(v: DataFrame): DataFrame = {
+    val start = edges.agg(min($"src").as("id"))
+    // the farthest node (ties to the smaller id) of a BFS from `seed`
+    def far(seed: DataFrame): DataFrame = {
+      val v = bfsOf(edges, seed.select($"id".as("lm"), $"id"), ClosenessMaxHops)
       val mx = v.agg(max($"d").as("md"))
       v.join(broadcast(mx), $"d" === $"md")
         .agg(min($"id").as("fid"), min($"d").as("fd"))
     }
-    // Round-17: both BFS sweeps at the edge frame's materialized width
-    // ([[loopParts]] — task-launch overhead fix; values unchanged).
-    val (f1, f2) = withLoopWidth(edges.sparkSession, loopParts(edges)) {
-      val a = far(bfsFrom(e, start, ClosenessMaxHops))
-      val b = far(bfsFrom(e,
-        a.select($"fid".as("id")), ClosenessMaxHops))
-      (a, b)
-    }
+    val f1 = far(start)
+    val f2 = far(f1.select($"fid".as("id")))
     start.select($"id".as("start_node"))
       .crossJoin(broadcast(f1.select($"fid".as("sweep1_node"),
         $"fd".as("sweep1_ecc"))))

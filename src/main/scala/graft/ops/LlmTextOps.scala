@@ -1103,25 +1103,6 @@ object LlmTextOps {
 
   // ------------------------------------------- duplicate-cluster resolution
 
-  /** Connected components over the near-dup pair graph — the step that turns
-    * pair mining into an actual dedup decision: every document gets the id
-    * of its duplicate cluster (the component's minimum doc_id) and a `keep`
-    * flag marking the one survivor per cluster. Transitivity matters: if
-    * A≈B and B≈C, exact pairwise Jaccard may never link A to C, but all
-    * three are one duplicate group and only one should survive.
-    *
-    * Spark side is min-label propagation with pointer jumping: each round
-    * every vertex takes the minimum label among itself, its neighbors, AND
-    * its label's label (path doubling), so the distance-to-root roughly
-    * halves per round and convergence is O(log diameter) — a 1000-hop
-    * duplicate chain (templated boilerplate produces exactly those)
-    * resolves in ~11 rounds, not 1000. Each round is two shuffles keyed on
-    * (edge endpoint, label); the driver loop holds only a convergence
-    * counter, never data — the same round-bounding idea as
-    * large-star/small-star. A non-converged exit THROWS rather than
-    * returning silently-wrong labels. The DuckDB oracle replays the same
-    * fixpoint as a recursive transitive-closure CTE, so cluster assignment
-    * is hash-verified end-to-end including singleton handling. */
   /** Recursive transitive-closure CTE chain over the near-dup pair graph,
     * ending in `reach (id, r)` — shared by the three cluster-consuming
     * oracles ([[dedupCluster]], [[dedupClusterLs]], [[dedupKeepBest]]). */
@@ -1142,6 +1123,22 @@ object LlmTextOps {
       |  SELECT e.b AS id, reach.r AS r FROM reach JOIN e ON e.a = reach.id
       |)""".stripMargin
 
+  /** Connected components over the near-dup pair graph — the step that turns
+    * pair mining into an actual dedup decision: every document gets the id
+    * of its duplicate cluster (the component's minimum doc_id) and a `keep`
+    * flag marking the one survivor per cluster. Transitivity matters: if
+    * A≈B and B≈C, exact pairwise Jaccard may never link A to C, but all
+    * three are one duplicate group and only one should survive.
+    *
+    * Resolved by [[clusterLsOf]] (large-star/small-star, O(log n) rounds —
+    * a long duplicate chain, the shape templated boilerplate produces,
+    * closes in a few rounds: the spec's 250-hop chain in about 6); the
+    * driver loop holds only convergence counters, never data, and a
+    * non-converged exit THROWS rather than returning silently-wrong
+    * labels. The DuckDB oracle
+    * replays the fixpoint as a recursive transitive-closure CTE, so
+    * cluster assignment is hash-verified end-to-end including singleton
+    * handling. */
   val dedupCluster: QueryDef = QueryDef(
     "llm_dedup_cluster",
     clusterCtes +
@@ -1150,91 +1147,9 @@ object LlmTextOps {
         |       CAST(CASE WHEN min(r) = id THEN 1 ELSE 0 END AS BIGINT) AS keep
         |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin,
   ) { (spark, dir) =>
-    clusterOf(
+    clusterLsOf(
       neardupPairsShared(spark, dir).select($"doc_a", $"doc_b"),
       Tables.documents(spark, dir).select($"doc_id"))
-  }
-
-  /** Safety cap on propagation rounds. Pointer jumping halves the
-    * distance-to-root each round, so 48 rounds covers component diameters
-    * beyond 2^40 — hitting the cap means the loop is broken, not the data,
-    * and [[clusterOf]] throws rather than returning wrong labels. */
-  private val MaxClusterRounds = 48
-
-  /** Min-label propagation with pointer jumping over an undirected pair
-    * list, to fixpoint. `pairs` must have (doc_a, doc_b); `docs` supplies
-    * the vertex set (so documents in no pair come out as their own
-    * singleton cluster).
-    *
-    * Each round computes
-    * `l'(v) = min(l(v), min_{u∈N(v)} l(u), l(l(v)))`: the neighbor-min term
-    * is classic label propagation (O(diameter) alone); the label-of-label
-    * term is path doubling, which cuts the round count to O(log diameter)
-    * — labels always name a vertex in the same component, so the lookup
-    * join stays inside the component and the fixpoint is still exactly
-    * "every vertex holds its component's minimum doc_id" (at fixpoint the
-    * label is constant across every edge, hence constant per component,
-    * and the only self-labeled vertex is the minimum). Throws if the cap
-    * is hit without convergence instead of silently returning
-    * part-propagated labels (the round-4/5 latent bug). */
-  private[graft] def clusterOf(pairs: DataFrame, docs: DataFrame): DataFrame = {
-    val edges = graft.Caches.persist(
-      pairs.select($"doc_a".as("a"), $"doc_b".as("b"))
-        .union(pairs.select($"doc_b".as("a"), $"doc_a".as("b"))))
-    var labels = graft.Caches.persist(
-      docs.select($"doc_id", $"doc_id".as("cluster_id")))
-    var changed = 1L
-    var iter = 0
-    // Round-18: labels are per-element MONOTONE NON-INCREASING (min
-    // propagation), so Σ(cluster_id) — free from the fused checkpoint —
-    // strictly decreases whenever any label changes; the per-round
-    // changed-count join runs ONLY when the sums match, as the exact
-    // confirmation (a wrap-around collision at equal sums is confirmed
-    // or refuted by the join, so correctness never rests on the sum).
-    var prevSum = labels.agg(sum($"cluster_id")).head.getLong(0)
-    // Round-17: jump rounds at a width sized from the measured edge count
-    // (one extra count on the persisted union — amortized over the ~6
-    // jobs × log-diameter rounds it right-sizes; the clusterLsOf
-    // pattern). Values are width-independent.
-    withLoopWidth(pairs.sparkSession,
-        loopPartsFor(pairs.sparkSession, edges.count())) {
-    while (changed > 0 && iter < MaxClusterRounds) {
-      val nbrMin = edges
-        .join(labels.select($"doc_id".as("a"), $"cluster_id".as("la")), "a")
-        .groupBy($"b").agg(min($"la").as("nmin"))
-        .select($"b".as("doc_id"), $"nmin")
-      val stepped = labels.join(nbrMin, Seq("doc_id"), "left")
-        .select($"doc_id",
-          least($"cluster_id", coalesce($"nmin", $"cluster_id")).as("cluster_id"))
-      val jump = labels.select(
-        $"doc_id".as("via"), $"cluster_id".as("lvia"))
-      // eager localCheckpoint, not persist: each round references the
-      // previous label table three times, so without lineage truncation the
-      // logical plan grows 3^rounds and deep components OOM the driver on
-      // plan strings alone
-      val (next, _, nSum) = graft.Caches.localCheckpointCountSum(
-        stepped.join(jump, stepped("cluster_id") === jump("via"), "left")
-          .select(stepped("doc_id"),
-            least(stepped("cluster_id"), coalesce($"lvia", stepped("cluster_id")))
-              .as("cluster_id")), "cluster_id")
-      changed =
-        if (nSum != prevSum) 1L
-        else next
-          .join(labels.select($"doc_id", $"cluster_id".as("old")), "doc_id")
-          .filter($"cluster_id" < $"old").count()
-      labels = next
-      prevSum = nSum
-      iter += 1
-    }
-    }
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"clusterOf did not converge after $MaxClusterRounds rounds " +
-          s"($changed labels still changing) — refusing to return " +
-          "non-converged cluster labels")
-    labels.select($"doc_id", $"cluster_id",
-      when($"cluster_id" === $"doc_id", 1L).otherwise(0L).as("keep"))
-      .orderBy($"doc_id")
   }
 
   /** Safety cap for [[clusterLsOf]]. The alternating algorithm is proven
@@ -1246,18 +1161,16 @@ object LlmTextOps {
 
   /** Large-star/small-star connected components (the alternating algorithm
     * of Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC'14) — the O(log n)-round SCALE TWIN of [[clusterOf]]. Same
-    * contract: `pairs(doc_a, doc_b)` undirected, `docs(doc_id)` the vertex
-    * set, output (doc_id, cluster_id = component min, keep).
+    * SoCC'14) — the engine's one connected-components kernel.
+    * `pairs(doc_a, doc_b)` undirected, `docs(doc_id)` the vertex set (so
+    * documents in no pair come out as their own singleton cluster), output
+    * (doc_id, cluster_id = component min, keep).
     *
-    * Why a twin: [[clusterOf]]'s pointer-jumping label table is one row per
-    * VERTEX and its per-round join is labels⋈edges — the right shape when
-    * labels fit comfortably; large-star/small-star instead rewrites the
-    * EDGE LIST itself toward min-rooted stars, needs no separate label
-    * state, and its per-round cost shrinks as edges collapse into stars —
-    * the standard choice at corpus scale where the edge set, not the vertex
-    * set, dominates. Each round is two grouped aggregations + two
-    * equi-joins, all keyed on edge endpoints:
+    * It rewrites the EDGE LIST itself toward min-rooted stars, needs no
+    * separate label state, and its per-round cost shrinks as edges
+    * collapse into stars — the standard choice at corpus scale, where the
+    * edge set, not the vertex set, dominates. Each round is two grouped
+    * aggregations + two equi-joins, all keyed on edge endpoints:
     *
     *  - large-star: per node u, m = min({u} ∪ N(u)); every neighbor v > u
     *    re-links to (v, m) — strictly-larger neighbors hang off the local
@@ -1270,16 +1183,16 @@ object LlmTextOps {
     * component, so connectivity is invariant; the fixpoint is exactly one
     * star per component rooted at the component minimum. Convergence is
     * detected set-wise (equal counts + empty anti-join — two cheap jobs on
-    * checkpointed frames); a capped non-converged exit THROWS, the
-    * [[clusterOf]] convention. All arithmetic is integer min/join, so the
-    * result is deterministic and shares [[dedupCluster]]'s recursive-CTE
-    * oracle verbatim. */
+    * checkpointed frames); a capped non-converged exit THROWS rather than
+    * returning partial stars. All arithmetic is integer min/join, so the
+    * result is deterministic and matches [[dedupCluster]]'s recursive-CTE
+    * oracle. */
   private[graft] def clusterLsOf(pairs: DataFrame, docs: DataFrame): DataFrame = {
     // canonical (a > b) orientation; self-pairs dropped. persist, not
     // localCheckpoint: round 0 needs no lineage truncation (it is never
     // rebuilt from a prior round), and persist lets the possibly-expensive
-    // upstream pair mining reuse cached blocks across reruns exactly as
-    // clusterOf does — only the per-round loop state below truncates.
+    // upstream pair mining reuse cached blocks across reruns — only the
+    // per-round loop state below truncates.
     var e = graft.Caches.persist(
       pairs.select(greatest($"doc_a", $"doc_b").as("a"),
           least($"doc_a", $"doc_b").as("b"))
@@ -1294,10 +1207,8 @@ object LlmTextOps {
     // (geo_cluster / dq_golden_record drift-watch lanes); at cluster
     // scale the width grows with the frame. Values are width-independent.
     val lw = loopPartsFor(pairs.sparkSession, nEdges)
-    val dbg = sys.env.contains("GRAFT_CLUSTER_DEBUG")
     withLoopWidth(pairs.sparkSession, lw) {
     while (!converged && iter < MaxLsRounds) {
-      val dt0 = if (dbg) System.nanoTime() else 0L
       // Each star step is ONE window over the step's grouping key instead
       // of a groupBy-min joined back to the edges: the min-per-node map is
       // VERTEX-sized, so hinting it broadcast would lie at corpus scale,
@@ -1334,8 +1245,6 @@ object LlmTextOps {
       e = next
       nEdges = nNext
       iter += 1
-      if (dbg) println(f"[cluster_ls] round=$iter edges=$nEdges " +
-        f"converged=$converged t=${(System.nanoTime() - dt0) / 1e9}%.2f")
     }
     }
     if (!converged)
@@ -1354,19 +1263,11 @@ object LlmTextOps {
       .orderBy($"doc_id")
   }
 
-  /** [[dedupCluster]]'s scale twin on the identical near-dup pair graph,
-    * resolved by [[clusterLsOf]] instead of label propagation — same
-    * output contract, same recursive-CTE oracle (component membership is
-    * algorithm-independent), so both implementations are hash-verified
-    * against the same ground truth every round. */
-  val dedupClusterLs: QueryDef = QueryDef(
-    "llm_dedup_cluster_ls",
-    dedupCluster.oracle.get,
-  ) { (spark, dir) =>
-    clusterLsOf(
-      neardupPairsShared(spark, dir).select($"doc_a", $"doc_b"),
-      Tables.documents(spark, dir).select($"doc_id"))
-  }
+  /** [[dedupCluster]] under its second registered name: the same
+    * [[clusterLsOf]] resolution of the same near-dup pair graph, checked
+    * against the same recursive-CTE oracle. */
+  val dedupClusterLs: QueryDef =
+    dedupCluster.copy(name = "llm_dedup_cluster_ls")
 
   /** CANONICAL-DOC selection: the retention policy a production dedup
     * actually applies. [[dedupCluster]] keeps the arbitrary min-id member
@@ -1376,8 +1277,8 @@ object LlmTextOps {
     * deterministic tiebreak. Per doc: its cluster, the cluster size, its
     * quality, and whether it is the cluster's canonical survivor.
     *
-    * Scale shape: cluster resolution is the already-audited O(log n)
-    * pointer-jumping engine; the quality score is a map-only pass; the
+    * Scale shape: cluster resolution is the O(log n) [[clusterLsOf]]
+    * kernel; the quality score is a map-only pass; the
     * argmax-per-cluster is one bounded window keyed on cluster_id (row
     * width: three numerics). Nothing new shuffles the text. Determinism:
     * quality is round(·, 4) of the same single expression both engines
@@ -1412,7 +1313,7 @@ object LlmTextOps {
     * derives from `docs` as before. */
   private[graft] def dedupKeepBestOf(docs: DataFrame,
       pairsOpt: Option[DataFrame] = None): DataFrame = {
-    val clusters = clusterOf(
+    val clusters = clusterLsOf(
       pairsOpt.getOrElse(
         neardupPlan(docShinglesOf(docs)).select($"doc_a", $"doc_b")),
       docs.select($"doc_id")).select($"doc_id", $"cluster_id")
@@ -2328,7 +2229,7 @@ object LlmTextOps {
     * distinct-word symbol table (weighted by corpus word frequency), fuses
     * the most frequent pair corpus-wide (ties broken lexicographically on
     * the pair), and rewrites every word's symbol sequence before the next
-    * round — the clusterOf/pageRankOf iteration pattern applied to
+    * round — the clusterLsOf/pageRankOf iteration pattern applied to
     * vocabulary learning, with per-round localCheckpoint lineage
     * truncation on both the 1-row winner and the rewritten table.
     *

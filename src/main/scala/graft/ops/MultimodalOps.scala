@@ -948,8 +948,8 @@ object MultimodalOps {
 
   /** Near-dup CLUSTER resolution for binary assets — the step after
     * [[simhashPayload]]'s pair mining: connected components over the
-    * hamming≤1 pair graph (pointer-jumping CC, `LlmTextOps.clusterOf` — the
-    * same O(log diameter) machinery the text lane uses), labels = min
+    * hamming≤1 pair graph ([[LlmTextOps.clusterLsOf]] — the same
+    * O(log n)-round kernel the text lanes use), labels = min
     * doc_id. Emits only docs that appear in some pair: the dedup-actionable
     * set ("keep cluster_id, drop the rest"), singletons stay out of the
     * frame. Oracle is an independent recursive-CTE closure over the same
@@ -980,7 +980,7 @@ object MultimodalOps {
       simhashPayloadOf(mediaTable(spark, dir)).select($"doc_a", $"doc_b"))
     val docs = pairs.select($"doc_a".as("doc_id"))
       .union(pairs.select($"doc_b".as("doc_id"))).distinct()
-    LlmTextOps.clusterOf(pairs, docs)
+    LlmTextOps.clusterLsOf(pairs, docs)
       .select($"doc_id", $"cluster_id").orderBy($"doc_id")
   }
 

@@ -5,9 +5,9 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.StructType
 
 /** Narrow shim into Spark's `private[sql]` surface (the classpath-package
-  * trick, no reflection): rebuild a DataFrame over an already-computed
+  * trick, no reflection): build a DataFrame over an already-computed
   * `InternalRow` RDD with a FRESH `LogicalRDD` — crucially one WITHOUT the
-  * origin statistics `Dataset.localCheckpoint` preserves.
+  * origin statistics `Dataset.localCheckpoint` would preserve.
   *
   * Why this exists (round-10 finding): `localCheckpoint` truncates the
   * LINEAGE but keeps the truncated plan's `Statistics` as the new leaf's
@@ -23,19 +23,8 @@ import org.apache.spark.sql.types.StructType
   * which is exactly right for loop state of unknown size.
   */
 object GraftShim {
-  /** `df` must already be checkpointed/materialized; returns the same rows
-    * as a fresh stat-less scan (zero re-computation: reuses `toRdd`). */
-  def withoutOriginStats(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
-    val rows: RDD[InternalRow] = df.queryExecution.toRdd
-    val schema: StructType = df.schema
-    spark.internalCreateDataFrame(rows, schema)
-  }
-
   /** Wrap an already-materialized `InternalRow` RDD as a stat-less
-    * DataFrame leaf — the [[withoutOriginStats]] construction for callers
-    * that hold the RDD directly (the fused checkpoint+statistic path in
-    * [[graft.Caches]]). */
+    * DataFrame leaf (the checkpoint construction in [[graft.Caches]]). */
   def fromInternalRows(spark: SparkSession, rdd: RDD[InternalRow],
       schema: StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema)

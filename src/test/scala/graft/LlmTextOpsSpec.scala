@@ -210,7 +210,7 @@ class LlmTextOpsSpec extends AnyFunSuite {
     // 10-11 (independent pair); 99 is in no pair.
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
     val docs = Seq(1L, 2L, 3L, 10L, 11L, 99L).toDF("doc_id")
-    val out = LlmTextOps.clusterOf(pairs, docs).collect()
+    val out = LlmTextOps.clusterLsOf(pairs, docs).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     Caches.release()
     assert(out.toSeq == Seq(
@@ -220,19 +220,19 @@ class LlmTextOpsSpec extends AnyFunSuite {
     ))
   }
 
-  test("clusterOf resolves a 120-hop chain (pointer jumping, O(log d) rounds)") {
+  test("clusterLsOf resolves a 120-hop chain (O(log n) rounds)") {
     import spark.implicits.{localSeqToDatasetHolder, newProductEncoder, newLongEncoder}
     // A single path component 0-1-2-...-120: plain neighbor-min propagation
     // needs 120 rounds (the pre-round-6 code capped at 20 and silently
     // returned wrong labels for exactly this shape — templated-boilerplate
-    // dedup chains are real); with path doubling it converges well inside
-    // MaxClusterRounds. Expected labels match the recursive-CTE oracle
+    // dedup chains are real); star contraction converges well inside
+    // MaxLsRounds. Expected labels match the recursive-CTE oracle
     // semantics analytically: every vertex labels to the component min (0),
     // only vertex 0 keeps; 500 stays a self-labeled singleton.
     val n = 120
     val pairs = (0L until n).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val docs = ((0L to n) :+ 500L).toDF("doc_id")
-    val out = LlmTextOps.clusterOf(pairs, docs).collect()
+    val out = LlmTextOps.clusterLsOf(pairs, docs).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     Caches.release()
     val expected = (0L to n).map(i => (i, 0L, if (i == 0L) 1L else 0L)) :+
@@ -242,7 +242,7 @@ class LlmTextOpsSpec extends AnyFunSuite {
 
   test("large-star/small-star: transitivity, singletons, orientation-independence") {
     import spark.implicits.{localSeqToDatasetHolder, newProductEncoder, newLongEncoder}
-    // same shape as the clusterOf fixture, with pairs in BOTH orientations
+    // same shape as the fixture above, with pairs in BOTH orientations
     // and a duplicate pair — clusterLsOf must canonicalize internally
     val pairs = Seq((1L, 2L), (3L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
     val docs = Seq(1L, 2L, 3L, 10L, 11L, 99L).toDF("doc_id")
@@ -261,8 +261,7 @@ class LlmTextOpsSpec extends AnyFunSuite {
     // the corpus-scale shape: a duplicate chain deeper than any fixed
     // O(diameter) round budget. The edge-rewriting fixpoint must collapse
     // it to a single min-rooted star well inside MaxLsRounds (observed ~6
-    // rounds; a throw here means the alternation is broken) and agree with
-    // the pointer-jumping twin exactly.
+    // rounds; a throw here means the alternation is broken).
     val n = 250
     val pairs = (0L until n).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val docs = ((0L to n) :+ 900L).toDF("doc_id")
@@ -272,11 +271,6 @@ class LlmTextOpsSpec extends AnyFunSuite {
     val expected = (0L to n).map(i => (i, 0L, if (i == 0L) 1L else 0L)) :+
       (900L, 900L, 1L)
     assert(out.toSeq == expected)
-    // both component algorithms are interchangeable on the same input
-    val lp = LlmTextOps.clusterOf(pairs, docs).collect().map(_.toSeq)
-    Caches.release()
-    assert(out.map(t => Seq(t._1, t._2, t._3)).toSeq == lp.toSeq,
-      "clusterLsOf and clusterOf must agree")
   }
 
   test("dedup cluster keep-set plus drop-set partitions the corpus") {
