@@ -568,8 +568,8 @@ object DqOps {
     * CONSTRUCTION and the old 100M-row id-pair DISTINCT (the sf1
     * rehearsal's dominant exchange) disappears; the variant join's output
     * shrinks from Σ(ids per variant)² to Σ(names per variant)² rows —
-    * invariant under corpus replication. [[typoCandidatesIdJoin]] keeps
-    * the id-level form as the A/B witness (spec-pinned on a duplicated-
+    * invariant under corpus replication. `TextWitnesses.typoCandidatesIdJoin`
+    * (test sources) keeps the id-level form as the A/B witness (spec-pinned on a duplicated-
     * name corpus, since the graded SFs have unique names). */
   private[graft] def typoCandidates(customer: DataFrame): DataFrame = {
     val v = graft.Caches.persist(
@@ -611,30 +611,6 @@ object DqOps {
       .select($"x.id".as("id1"), $"x.w".as("w1"),
         $"y.id".as("id2"), $"y.w".as("w2"))
     cross.unionAll(clique).select($"id1", $"w1", $"id2", $"w2")
-  }
-
-  /** Pre-round-18 id-level candidate join, retained as the A/B witness
-    * for [[typoCandidates]] — identical output as a SET (and both forms
-    * are duplicate-free), proven by `DqOpsSpec` on a corpus WITH
-    * duplicated names (the expansion path the graded SFs never hit). */
-  private[graft] def typoCandidatesIdJoin(customer: DataFrame): DataFrame = {
-    val v = graft.Caches.persist(
-      customer.select($"c_custkey".as("id"), $"c_name".as("w")))
-    val del = v
-      .select($"id", $"w", explode(sequence(lit(0), lit(30))).as("i"))
-      .filter($"i" <= length($"w"))
-      .select($"id",
-        expr("""CASE WHEN i = 0 THEN w
-               ELSE concat(substring(w, 1, i - 1), substring(w, i + 1, 100)) END""")
-          .as("variant"))
-      .distinct()
-    del.as("a")
-      .join(del.as("b"), $"a.variant" === $"b.variant" && $"a.id" < $"b.id")
-      .select($"a.id".as("id1"), $"b.id".as("id2"))
-      .distinct()
-      .join(v.select($"id".as("id1"), $"w".as("w1")), "id1")
-      .join(v.select($"id".as("id2"), $"w".as("w2")), "id2")
-      .select($"id1", $"w1", $"id2", $"w2")
   }
 
   /** Pair-density instrumentation for the SymSpell blocking lane

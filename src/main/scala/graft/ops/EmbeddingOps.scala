@@ -36,15 +36,6 @@ object EmbeddingOps {
   private val NQueries = 5 // query set: vec_id < 5
   private val TopK = 10
 
-  /** Deterministic pseudo-random hyperplanes in [-1,1], MINSTD LCG. */
-  private val planes: IndexedSeq[IndexedSeq[Double]] = {
-    val p = 2147483647L
-    val xs = Iterator.iterate(7L)(x => x * 48271L % p)
-      .drop(1).take(NPlanes * Dim).toIndexedSeq
-    (0 until NPlanes).map(j =>
-      (0 until Dim).map(d => xs(j * Dim + d).toDouble / p * 2.0 - 1.0))
-  }
-
   /** Sequential-fold dot product of two double-array columns. */
   private def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
@@ -57,15 +48,6 @@ object EmbeddingOps {
         transform($"embedding", x => x.cast("double")).as("v"))
       .withColumn("nrm",
         sqrt(aggregate($"v", lit(0.0), (acc, x) => acc + x * x)))
-
-  private def planeLit(j: Int): Column =
-    array(planes(j).map(lit): _*)
-
-  /** LSH bucket id: one sign bit per hyperplane. */
-  private def bucketCol: Column =
-    (0 until NPlanes)
-      .map(j => when(dot($"v", planeLit(j)) > 0, lit(1 << j)).otherwise(lit(0)))
-      .reduce(_ + _)
 
   // --------------------------------------- corpus-derived LSH fan-out
 
@@ -104,10 +86,10 @@ object EmbeddingOps {
   private val ScaledMaxPlanes = 30
   private val ScaledTarget = 32L
 
-  /** Extended hyperplane pool from the SAME MINSTD stream as [[planes]]:
-    * the first [[NPlanes]] scaled planes are bit-identical to the fixed
-    * pool, so nb = 4 reproduces the fixed-plane buckets exactly
-    * (spec-pinned at test SF, where n ≤ 32·2⁴ keeps nb at the floor). */
+  /** The one hyperplane pool: deterministic pseudo-random hyperplanes in
+    * [-1,1] from a MINSTD LCG. The fixed-count lanes use its first
+    * [[NPlanes]] planes (the former fixed pool `planes`, bit-identical);
+    * the corpus-derived lanes use the first nb. */
   private val planesScaled: IndexedSeq[IndexedSeq[Double]] = {
     val p = 2147483647L
     val xs = Iterator.iterate(7L)(x => x * 48271L % p)
@@ -127,10 +109,11 @@ object EmbeddingOps {
   private val pow2Lit: Column =
     array((0 until ScaledMaxPlanes).map(j => lit(1 << j)): _*)
 
-  /** Bucket id under the corpus-derived plane count `nb` (a column): one
-    * sign bit per ACTIVE plane. ONE fold over the active prefix of the
-    * pool — per-row work is nb dots and the expression tree is constant
-    * in [[ScaledMaxPlanes]] (the round-15 30-term guarded-`when` chain
+  /** Bucket id under the plane count `nb` (a column): one sign bit per
+    * ACTIVE plane — the one bucket fold (at nb = [[NPlanes]] it is the
+    * former fixed `bucketCol`, bit for bit). ONE fold over the active
+    * prefix of the pool — per-row work is nb dots and the expression tree
+    * is constant in [[ScaledMaxPlanes]] (the round-15 30-term guarded-`when` chain
     * billed every row for the inactive planes' branch walk and inflated
     * every consumer plan: pool 16→30 alone cost the warm hnsw walk
     * ×1.27 at sf0.1, round-16 A/B). Same dot, same element order, same
@@ -171,22 +154,32 @@ object EmbeddingOps {
     e.agg(count(lit(1)).as("__n")).select(nbCol.as("__nb"))
   }
 
-  /** Attach (`__nb`, `bucket`) to a frame carrying `v`: the scaled
-    * sign-LSH bucket under the corpus-derived plane count. */
+  /** 1-row (`__nb`) frame holding the fixed plane count [[NPlanes]] — the
+    * lanes whose buckets do not grow with the corpus (`llm_ann_lsh`,
+    * `llm_ann_recall`, `llm_embed_neardup`, `llm_embed_dedup_cluster`)
+    * run the one bucketer, probe and search on it. A local relation, so
+    * broadcasting it runs no job. */
+  private def fixedNbFrame(spark: SparkSession): DataFrame = {
+    import spark.implicits.{localSeqToDatasetHolder, newIntEncoder}
+    Seq(NPlanes).toDF("__nb")
+  }
+
+  /** Attach (`__nb`, `bucket`) to a frame carrying `v`: the sign-LSH
+    * bucket under the plane count `nb` (a 1-row `__nb` frame: derived by
+    * [[nbFrameOf]] or fixed by [[fixedNbFrame]]). */
   private def withScaledBucket(df: DataFrame, nb: DataFrame): DataFrame =
     df.crossJoin(broadcast(nb)).withColumn("bucket", scaledBucketCol($"__nb"))
 
-  /** Probe-bucket explode for hamming ≤ 1 candidate joins under the
-    * derived count: own bucket + one flip per ACTIVE plane (needs
-    * `bucket` and `__nb` on the input row). The probe set's values are
+  /** The one probe expansion (the fixed-count lanes' former inline probe
+    * arrays are its nb = [[NPlanes]] case) — probe-bucket explode for
+    * hamming ≤ 1 candidate joins: own bucket + one flip per ACTIVE plane
+    * (needs `bucket` and `__nb` on the input row). The probe set's values are
     * pairwise distinct, so a qualifying pair matches in exactly one
     * (probe, home) combination — no DISTINCT pass downstream. */
-  private def probeBuckets: Column = {
-    val p2 = array((0 until ScaledMaxPlanes).map(j => lit(1 << j)): _*)
+  private def probeBuckets: Column =
     explode(concat(array($"bucket"),
       transform(sequence(lit(0), $"__nb" - 1),
-        j => $"bucket".bitwiseXOR(element_at(p2, j + 1)))))
-  }
+        j => $"bucket".bitwiseXOR(element_at(pow2Lit, j + 1)))))
 
   /** The oracle-side nb derivation: `p AS (SELECT … AS nb FROM <src>)` —
     * the identical integer ladder over the identical count base, so
@@ -218,7 +211,7 @@ object EmbeddingOps {
     s"list_sum([$a[i]*$b[i] for i in range(1, len($a)+1)])"
 
   private def planeSqlList(j: Int): String =
-    planes(j).mkString("[", ", ", "]")
+    planesScaled(j).mkString("[", ", ", "]")
 
   private def bucketSql(v: String): String =
     (0 until NPlanes).map(j =>
@@ -291,21 +284,8 @@ object EmbeddingOps {
          |      FROM s)
          |SELECT q_id, vec_id, CAST(rk AS BIGINT) AS rank, round(sim, 6) AS sim
          |FROM r WHERE rk <= $TopK ORDER BY q_id, rank""".stripMargin,
-  )(lshTopK)
-
-  /** Multi-probe LSH top-k plan — shared by [[annLsh]] and [[annRecall]]. */
-  private def lshTopK(spark: SparkSession, dir: String): DataFrame = {
-    val b = vectors(spark, dir).withColumn("bucket", bucketCol)
-    val probeBuckets = array(
-      $"qb" +: (0 until NPlanes).map(j => $"qb".bitwiseXOR(lit(1 << j))): _*)
-    val q = b.filter($"vec_id" < NQueries)
-      .select($"vec_id".as("q_id"), $"v".as("qv"), $"bucket".as("qb"))
-      .select($"q_id", $"qv", explode(probeBuckets).as("bucket"))
-    val scored = b.join(broadcast(q), Seq("bucket"))
-      .filter($"q_id" =!= $"vec_id")
-      .select($"q_id", $"vec_id",
-        call_function("cosine_sim", $"qv", $"v").as("sim"))
-    rankTopK(scored)
+  ) { (spark, dir) =>
+    annLshScaledOf(vectors(spark, dir), Some(fixedNbFrame(spark)))
   }
 
   private def rankTopK(scored: DataFrame): DataFrame =
@@ -436,33 +416,31 @@ object EmbeddingOps {
   /** Argmax re-assignment of an assignment frame `(vec_id, v, nrm, cell,
     * …)` against learned centroids `nc`, preserving the previous cell as
     * `old_cell`: the broadcast crossJoin form within [[MaxBroadcastCells]],
-    * the blocked shuffle form ([[assignBlockedOf]]) past it — so a config
-    * bump degrades to the scale plan instead of refusing (or worse,
-    * silently broadcasting gigabytes). Both forms tie toward the smaller
-    * candidate cell. `blockCellsOverride` forces the blocked form with a
-    * given block size — the hook [[kmeansTrainBlocked]] uses to replay
-    * the WHOLE training loop through the scale path. */
+    * the blocked shuffle form ([[assignBlockedOf]], blocks of
+    * [[MaxBroadcastCells]]) past it — so a config bump degrades to the
+    * scale plan instead of refusing (or worse, silently broadcasting
+    * gigabytes). Both forms tie toward the smaller candidate cell.
+    * `blockCellsOverride` forces the blocked form with a given block size
+    * — the hook [[kmeansTrainBlocked]] uses to replay the WHOLE training
+    * loop through the scale path. */
   private def reassignOf(a: DataFrame, nc: DataFrame,
       blockCellsOverride: Option[Int] = None): DataFrame =
-    if (blockCellsOverride.isDefined) {
-      a.select($"vec_id", $"v", $"nrm", $"cell".as("old_cell"))
-        .join(assignBlockedOf(a.select($"vec_id", $"v"), nc, NCells,
-          blockCellsOverride.get), "vec_id")
-        .select($"vec_id", $"v", $"nrm", $"cell", $"old_cell")
-    } else if (NCells <= MaxBroadcastCells) {
-      a.select($"vec_id", $"v", $"nrm", $"cell".as("old_cell"))
-        .crossJoin(broadcast(nc.select($"cell".as("cand"), $"cv")))
-        .select($"vec_id", $"v", $"nrm", $"old_cell", $"cand",
-          call_function("cosine_sim", $"v", $"cv").as("s"))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy($"vec_id").orderBy($"s".desc, $"cand".asc)))
-        .filter($"rk" === 1)
-        .select($"vec_id", $"v", $"nrm", $"cand".as("cell"), $"old_cell")
-    } else {
-      a.select($"vec_id", $"v", $"nrm", $"cell".as("old_cell"))
-        .join(assignBlockedOf(a.select($"vec_id", $"v"), nc, NCells,
-          MaxBroadcastCells), "vec_id")
-        .select($"vec_id", $"v", $"nrm", $"cell", $"old_cell")
+    blockCellsOverride.orElse(
+        Option.when(NCells > MaxBroadcastCells)(MaxBroadcastCells)) match {
+      case Some(blockCells) =>
+        a.select($"vec_id", $"v", $"nrm", $"cell".as("old_cell"))
+          .join(assignBlockedOf(a.select($"vec_id", $"v"), nc, NCells,
+            blockCells), "vec_id")
+          .select($"vec_id", $"v", $"nrm", $"cell", $"old_cell")
+      case None =>
+        a.select($"vec_id", $"v", $"nrm", $"cell".as("old_cell"))
+          .crossJoin(broadcast(nc.select($"cell".as("cand"), $"cv")))
+          .select($"vec_id", $"v", $"nrm", $"old_cell", $"cand",
+            call_function("cosine_sim", $"v", $"cv").as("s"))
+          .withColumn("rk", row_number().over(
+            Window.partitionBy($"vec_id").orderBy($"s".desc, $"cand".asc)))
+          .filter($"rk" === 1)
+          .select($"vec_id", $"v", $"nrm", $"cand".as("cell"), $"old_cell")
     }
 
   /** The blocked top-1 assignment exercised END-TO-END, oracle-backed:
@@ -924,7 +902,8 @@ object EmbeddingOps {
   ) { (spark, dir) =>
     val exact = exactTopK(spark, dir).select($"q_id", $"vec_id")
     recallOf(exact, ivfTopK(spark, dir), "ivf")
-      .unionAll(recallOf(exact, lshTopK(spark, dir), "lsh"))
+      .unionAll(recallOf(exact,
+        annLshScaledOf(vectors(spark, dir), Some(fixedNbFrame(spark))), "lsh"))
       .orderBy($"method", $"q_id")
   }
 
@@ -1190,11 +1169,8 @@ object EmbeddingOps {
   /** The [[embedNeardup]] candidate-mine + exact-cosine filter, extracted
     * so [[embedDedupCluster]] can resolve the same pair graph. */
   private def neardupPairsOf(spark: SparkSession, dir: String): DataFrame = {
-    val b = vectors(spark, dir).withColumn("bucket", bucketCol)
-    val probes = b.select($"vec_id", $"v", $"nrm",
-      explode(array($"bucket" +:
-        (0 until NPlanes).map(j => $"bucket".bitwiseXOR(lit(1 << j))): _*))
-        .as("bucket"))
+    val b = withScaledBucket(vectors(spark, dir), fixedNbFrame(spark))
+    val probes = b.select($"vec_id", $"v", $"nrm", probeBuckets.as("bucket"))
     val candidates = probes.as("x")
       .join(b.select($"vec_id".as("y_id"), $"bucket").as("y"), Seq("bucket"))
       .filter(col("x.vec_id") < col("y_id"))
@@ -3255,11 +3231,16 @@ object EmbeddingOps {
       |             sqrt(list_sum([v[i]*v[i] for i in range(1, len(v)+1)])) AS nrm
       |      FROM e1)""".stripMargin + lshScaledSearchSql
 
-  /** [[annLshScaled]] over any (vec_id, v, nrm) frame — fixture seam. */
-  private[graft] def annLshScaledOf(e: DataFrame): DataFrame = {
-    // corpus-derived active-plane count: integer comparison ladder over a
-    // 1-row broadcast (see annLshScaled docs for why never float log2)
-    val b = graft.Caches.persist(withScaledBucket(e, nbFrameOf(e)))
+  /** The one multi-probe sign-LSH top-k search over any (vec_id, v, nrm)
+    * frame — fixture seam. `nb` defaults to the corpus-derived plane count
+    * ([[annLshScaled]], `stream_ann_upsert`); [[annLsh]] and [[annRecall]]
+    * pass [[fixedNbFrame]] (the former `lshTopK`). */
+  private[graft] def annLshScaledOf(e: DataFrame,
+      nb: Option[DataFrame] = None): DataFrame = {
+    // default nb: the corpus-derived active-plane count, an integer
+    // comparison ladder over a 1-row broadcast (see annLshScaled docs for
+    // why never float log2)
+    val b = graft.Caches.persist(withScaledBucket(e, nb.getOrElse(nbFrameOf(e))))
     val q = b.filter($"vec_id" < NQueries)
       .select($"vec_id".as("q_id"), $"v".as("qv"), probeBuckets.as("bucket"))
     val scored = b.join(broadcast(q), Seq("bucket"))

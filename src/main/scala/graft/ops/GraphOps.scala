@@ -102,15 +102,24 @@ object GraphOps {
   }
 
   /** PageRank over a directed edge list (undirected graphs pass both
-    * orientations), fixed iteration count, damping 0.85.
+    * orientations), fixed iteration count, damping 0.85 — the one power
+    * iteration behind [[pageRank]] and [[personalizedPageRank]] (the
+    * former `personalizedPageRankOf`). Each node carries a teleport weight
+    * `tw`: 1.0 everywhere for global PageRank, or, with `seeds = Some(k)`,
+    * 1.0 on the k smallest node ids and 0.0 elsewhere (Personalized
+    * PageRank: ranks measure proximity TO THE SEEDS). Ranks start at `tw`
+    * and each round is rank = 0.15·tw + 0.85·(inflow); for global PageRank
+    * 0.15·1.0 = 0.15 and x·1.0 = x, so its arithmetic is the plain form
+    * the oracle replays, bit for bit.
     *
     * The node set is src ∪ dst, so sink nodes (appearing only as dst) are
     * ranked too, and their mass — which has no out-edges to flow along — is
-    * redistributed uniformly each round (the standard dangling-node
-    * treatment) instead of silently evaporating. Danglingness is detected
-    * once up front, so the common no-dangling case (undirected
-    * both-orientation inputs like the registered query) pays nothing for
-    * it and keeps the exact arithmetic the DuckDB oracle replays.
+    * sent back along the teleport vector each round (dq·tw/Σtw: uniformly
+    * for global PageRank, to the seeds for PPR, NetworkX's default)
+    * instead of silently evaporating. Danglingness is detected once up
+    * front, so the common no-dangling case (undirected both-orientation
+    * inputs like the registered queries) pays nothing for it and keeps
+    * the exact arithmetic the DuckDB oracle replays.
     *
     * Determinism: per-edge contributions are quantized to 1e-9 BIGINTs
     * BEFORE the per-node sum (the `llm_embed_centroid` architecture), so
@@ -125,7 +134,8 @@ object GraphOps {
     * which would double the logical plan each round — so that path
     * truncates every round (the lineage rule: loop state referenced more
     * than once per round is checkpointed every round). */
-  private[graft] def pageRankOf(edges: DataFrame, iters: Int): DataFrame = {
+  private[graft] def pageRankOf(edges: DataFrame, iters: Int,
+      seeds: Option[Int] = None): DataFrame = {
     // Round-17: rank loop at the edge frame's materialized width
     // ([[loopParts]]) — same task-launch-overhead finding as [[hitsOf]];
     // the final (lazy) readout joins at the restored session width.
@@ -138,14 +148,24 @@ object GraphOps {
     // broadcast-planned deg leaves e in scan partitioning.)
     val e = graft.Caches.persist(
       edges.select($"src", $"dst").join(deg, "src").repartition($"src"))
-    val nodes = graft.Caches.persist(
-      edges.select($"src".as("id"))
-        .union(edges.select($"dst".as("id"))).distinct())
+    val ids = edges.select($"src".as("id"))
+      .union(edges.select($"dst".as("id"))).distinct()
+    // seed membership resolved once into the node frame (broadcast join
+    // against the k-row seed table), so each round is still ONE join
+    // against the previous ranks
+    val nodes = graft.Caches.persist(seeds match {
+      case None => ids.select($"id", lit(1.0).as("tw"))
+      case Some(k) =>
+        ids.join(broadcast(ids.orderBy($"id").limit(k)
+            .select($"id", lit(1.0).as("seed_w"))), Seq("id"), "left")
+          .select($"id", coalesce($"seed_w", lit(0.0)).as("tw"))
+    })
     val dangling = graft.Caches.persist(
-      nodes.join(deg.select($"src".as("id")), Seq("id"), "left_anti"))
+      nodes.select($"id")
+        .join(deg.select($"src".as("id")), Seq("id"), "left_anti"))
     val hasDangling = !dangling.isEmpty
-    val nNodes = nodes.select(count(lit(1)).cast("double").as("nn"))
-    var ranks = nodes.select($"id", lit(1.0).as("rank"))
+    val twSum = nodes.agg(sum($"tw").as("tsum"))
+    var ranks = nodes.select($"id", $"tw".as("rank"))
     for (iter <- 1 to iters) {
       val contribs = e
         .join(ranks.select($"id".as("src"), $"rank"), "src")
@@ -156,18 +176,19 @@ object GraphOps {
         if (!hasDangling)
           nodes.join(summed, Seq("id"), "left")
             .select($"id",
-              (lit(0.15) + lit(0.85) * (coalesce($"sq", lit(0L)) / 1e9)).as("rank"))
+              (lit(0.15) * $"tw" +
+                lit(0.85) * (coalesce($"sq", lit(0L)) / 1e9)).as("rank"))
         else {
           // total dangling mass this round, quantized like the edge
-          // contributions; redistributed as dq/n to every node
+          // contributions; sent back as dq·tw/Σtw
           val dq = dangling.join(ranks, "id")
             .agg(coalesce(sum(round($"rank" * 1e9).cast("long")), lit(0L)).as("dq"))
           nodes.join(summed, Seq("id"), "left")
-            .crossJoin(broadcast(dq)).crossJoin(broadcast(nNodes))
+            .crossJoin(broadcast(dq)).crossJoin(broadcast(twSum))
             .select($"id",
-              (lit(0.15) + lit(0.85) *
+              (lit(0.15) * $"tw" + lit(0.85) *
                 ((coalesce($"sq", lit(0L)).cast("double") +
-                  $"dq".cast("double") / $"nn") / 1e9)).as("rank"))
+                  $"dq".cast("double") * $"tw" / $"tsum") / 1e9)).as("rank"))
         }
       ranks = if (hasDangling || iter % 5 == 0 || iter == iters)
         graft.Caches.localCheckpoint(next)
@@ -186,10 +207,13 @@ object GraphOps {
     * JOIN + GROUP BY the optimizer can check). The registered graph is
     * undirected with both orientations present, so the dangling set is
     * empty and the Spark side's no-dangling arithmetic is the one
-    * replayed here, bit for bit. */
-  private def pageRankSql(iters: Int): String = {
+    * replayed here, bit for bit. Shared by the global and personalized
+    * lanes: `nodes` is the CTE text defining `nodes` and `r0`, `teleport`
+    * the per-round teleport term, `where` the readout filter. */
+  private def prSql(iters: Int, nodes: String, teleport: String,
+      where: String): String = {
     val rounds = (1 to iters).map { i =>
-      s"""r$i AS (SELECT n.id, 0.15 + 0.85 * (CAST(coalesce(s.sq, 0) AS DOUBLE) / 1e9) AS rank
+      s"""r$i AS (SELECT n.id, $teleport + 0.85 * (CAST(coalesce(s.sq, 0) AS DOUBLE) / 1e9) AS rank
          |        FROM nodes n LEFT JOIN (
          |          SELECT e.dst AS id, sum(CAST(round(r.rank / e.deg * 1e9) AS BIGINT)) AS sq
          |          FROM ed e JOIN r${i - 1} r ON r.id = e.src GROUP BY 1) s ON n.id = s.id)"""
@@ -200,11 +224,10 @@ object GraphOps {
        |        UNION ALL SELECT p2 AS src, p1 AS dst FROM pairs),
        |deg AS (SELECT src, CAST(count(*) AS BIGINT) AS deg FROM und GROUP BY src),
        |ed AS (SELECT u.src, u.dst, d.deg FROM und u JOIN deg d ON u.src = d.src),
-       |nodes AS (SELECT src AS id FROM und UNION SELECT dst FROM und),
-       |r0 AS (SELECT id, CAST(1.0 AS DOUBLE) AS rank FROM nodes),
+       |$nodes
        |$rounds
        |SELECT id AS part, round(rank, 6) AS rank FROM r$iters
-       |ORDER BY rank DESC, part LIMIT 20""".stripMargin
+       |${where}ORDER BY rank DESC, part LIMIT 20""".stripMargin
   }
 
   /** Top-20 PageRank hubs of the co-occurrence graph ([[PrIters]] rounds).
@@ -213,7 +236,10 @@ object GraphOps {
     * algorithm hash-matchable across engines. */
   val pageRank: QueryDef = QueryDef(
     "graph_pagerank",
-    pageRankSql(PrIters),
+    prSql(PrIters,
+      """nodes AS (SELECT src AS id FROM und UNION SELECT dst FROM und),
+        |r0 AS (SELECT id, CAST(1.0 AS DOUBLE) AS rank FROM nodes),""".stripMargin,
+      "0.15", ""),
   ) { (spark, dir) =>
     val und = minedEdges(spark, dir)
     val edges = und.select($"p1".as("src"), $"p2".as("dst"))
@@ -224,96 +250,27 @@ object GraphOps {
       .limit(20)
   }
 
-  /** Personalized PageRank: the teleport mass lands ONLY on the seed set
-    * (here the 3 smallest node ids — deterministic) instead of uniformly,
-    * so ranks measure proximity TO THE SEEDS — the recommendation /
-    * expansion primitive ("parts relevant to this basket") global
-    * [[pageRank]] can't express. Same fixed-iteration, quantize-before-sum
-    * architecture: per-edge contributions become 1e-9 BIGINTs before the
-    * per-node sum, so the fixed point is bit-reproducible and DuckDB
-    * replays it exactly. Seed membership is resolved once into a 0/1
-    * indicator column on the node frame (broadcast join against the 3-row
-    * seed table), so each round is still ONE join against the previous
-    * ranks; non-dangling input keeps the checkpoint cadence of the global
-    * variant. */
-  private[graft] def personalizedPageRankOf(
-      edges: DataFrame, iters: Int, nSeeds: Int): DataFrame = {
-    // Round-17: teleport loop at the edge frame's materialized width
-    // ([[loopParts]]) — the [[pageRankOf]] arrangement; the final (lazy)
-    // readout joins at the restored session width.
-    withLoopWidth(edges.sparkSession, loopParts(edges)) {
-    val deg = edges.groupBy($"src").agg(count(lit(1)).as("deg"))
-    // src-partitioned cache, the pageRankOf arrangement: edges never
-    // re-shuffle across the teleport rounds
-    val e = graft.Caches.persist(
-      edges.select($"src", $"dst").join(deg, "src").repartition($"src"))
-    val seedIds = edges.select($"src".as("id"))
-      .union(edges.select($"dst".as("id"))).distinct()
-      .orderBy($"id").limit(nSeeds)
-    val nodes = graft.Caches.persist(
-      edges.select($"src".as("id"))
-        .union(edges.select($"dst".as("id"))).distinct()
-        .join(broadcast(seedIds.select($"id", lit(1.0).as("seed_w"))),
-          Seq("id"), "left")
-        .select($"id", coalesce($"seed_w", lit(0.0)).as("seed")))
-    var ranks = nodes.select($"id", $"seed".as("rank"))
-    for (iter <- 1 to iters) {
-      val contribs = e
-        .join(ranks.select($"id".as("src"), $"rank"), "src")
-        .select($"dst".as("id"),
-          round($"rank" / $"deg" * 1e9).cast("long").as("cq"))
-      val summed = contribs.groupBy($"id").agg(sum($"cq").as("sq"))
-      val next = nodes.join(summed, Seq("id"), "left")
-        .select($"id", $"seed",
-          (lit(0.15) * $"seed" +
-            lit(0.85) * (coalesce($"sq", lit(0L)) / 1e9)).as("rank"))
-      ranks = if (iter % 5 == 0 || iter == iters)
-        graft.Caches.localCheckpoint(next)
-      else next
-    }
-    ranks.select($"id", $"rank")
-    }
-  }
-
   private val PprSeeds = 3
-
-  /** The oracle unrolls the identical fixed point, with the seed indicator
-    * resolved by the same smallest-3 rule ([[pageRankSql]] pattern). */
-  private def pprSql(iters: Int): String = {
-    val rounds = (1 to iters).map { i =>
-      s"""r$i AS (SELECT n.id, 0.15 * n.seed + 0.85 * (CAST(coalesce(s.sq, 0) AS DOUBLE) / 1e9) AS rank
-         |        FROM nodes n LEFT JOIN (
-         |          SELECT e.dst AS id, sum(CAST(round(r.rank / e.deg * 1e9) AS BIGINT)) AS sq
-         |          FROM ed e JOIN r${i - 1} r ON r.id = e.src GROUP BY 1) s ON n.id = s.id)"""
-        .stripMargin
-    }.mkString(",\n")
-    s"""WITH $edgesSql,
-       |und AS (SELECT p1 AS src, p2 AS dst FROM pairs
-       |        UNION ALL SELECT p2 AS src, p1 AS dst FROM pairs),
-       |deg AS (SELECT src, CAST(count(*) AS BIGINT) AS deg FROM und GROUP BY src),
-       |ed AS (SELECT u.src, u.dst, d.deg FROM und u JOIN deg d ON u.src = d.src),
-       |ids AS (SELECT src AS id FROM und UNION SELECT dst FROM und),
-       |seeds AS (SELECT id FROM ids ORDER BY id LIMIT $PprSeeds),
-       |nodes AS (SELECT i.id, CASE WHEN s.id IS NULL THEN 0.0 ELSE 1.0 END AS seed
-       |          FROM ids i LEFT JOIN seeds s ON i.id = s.id),
-       |r0 AS (SELECT id, seed AS rank FROM nodes),
-       |$rounds
-       |SELECT id AS part, round(rank, 6) AS rank FROM r$iters
-       |WHERE rank > 0 ORDER BY rank DESC, part LIMIT 20""".stripMargin
-  }
 
   /** Top-20 parts by personalized PageRank from the 3 smallest part ids of
     * the co-occurrence graph — "expand this seed basket", value-checked
-    * against the DuckDB fixed-point twin. Zero-rank nodes (unreached in
-    * [[PrIters]] hops) are excluded so the tail is well-ordered. */
+    * against the DuckDB fixed-point twin (seeds resolved by the same
+    * smallest-3 rule). Zero-rank nodes (unreached in [[PrIters]] hops) are
+    * excluded so the tail is well-ordered. */
   val personalizedPageRank: QueryDef = QueryDef(
     "graph_ppr",
-    pprSql(PrIters),
+    prSql(PrIters,
+      s"""ids AS (SELECT src AS id FROM und UNION SELECT dst FROM und),
+         |seeds AS (SELECT id FROM ids ORDER BY id LIMIT $PprSeeds),
+         |nodes AS (SELECT i.id, CASE WHEN s.id IS NULL THEN 0.0 ELSE 1.0 END AS seed
+         |          FROM ids i LEFT JOIN seeds s ON i.id = s.id),
+         |r0 AS (SELECT id, seed AS rank FROM nodes),""".stripMargin,
+      "0.15 * n.seed", "WHERE rank > 0 "),
   ) { (spark, dir) =>
     val und = minedEdges(spark, dir)
     val edges = und.select($"p1".as("src"), $"p2".as("dst"))
       .union(und.select($"p2".as("src"), $"p1".as("dst")))
-    personalizedPageRankOf(edges, PrIters, PprSeeds)
+    pageRankOf(edges, PrIters, Some(PprSeeds))
       .filter($"rank" > 0)
       .select($"id".as("part"), round($"rank", 6).as("rank"))
       .orderBy($"rank".desc, $"part")
@@ -1061,7 +1018,7 @@ object GraphOps {
   }
 
   /** The [[hitsOf]] fixed point unrolled to chained DuckDB CTEs (the
-    * [[pageRankSql]] technique): same quantized BIGINT contribution per
+    * [[prSql]] technique): same quantized BIGINT contribution per
     * edge, same `q·n/t` normalization expression per half-round. The
     * normalizer t is `sum(q) OVER ()` — the identical exact BIGINT total
     * the Spark side broadcasts — expressed as a window so every CTE in
@@ -1574,6 +1531,29 @@ object GraphOps {
        |cm0 AS MATERIALIZED (SELECT u AS node, u AS comm FROM deg)
        |${(1 to rounds).map(louvainRoundCte(_, "und", "deg", "cm", skipSelf = false)).mkString}""".stripMargin
 
+  /** One oracle contraction level: `prev`'s communities contract edge
+    * table `src` into supergraph `ce` (inter-community weights summed,
+    * intra-community weights as self-loops), which gets its edge table
+    * `und`, degree table `deg` and [[CoarseRounds]] local-move rounds
+    * ending in `<cm><CoarseRounds>` — shared by the [[louvainCoarsen]]
+    * (one level) and [[louvainMultilevel]] (two levels) oracles. */
+  private def louvainLevelCtes(ce: String, src: String, prev: String,
+      und: String, deg: String, cm: String): String =
+    s""",
+       |$ce AS MATERIALIZED (
+       |  SELECT least(a.comm, b.comm) AS p1, greatest(a.comm, b.comm) AS p2,
+       |         CAST(sum(e.w) AS BIGINT) AS w
+       |  FROM $src e JOIN $prev a ON a.node = e.p1
+       |       JOIN $prev b ON b.node = e.p2
+       |  GROUP BY 1, 2),
+       |$und AS MATERIALIZED (SELECT p1 AS u, p2 AS v, w FROM $ce
+       |        UNION ALL SELECT p2, p1, w FROM $ce),
+       |$deg AS MATERIALIZED (SELECT u, CAST(sum(w) AS BIGINT) AS dg FROM $und GROUP BY u),
+       |${cm}0 AS MATERIALIZED (SELECT u AS node, u AS comm FROM $deg)""".stripMargin +
+      (1 to CoarseRounds)
+        .map(louvainRoundCte(_, und, deg, cm, skipSelf = true))
+        .mkString
+
   val louvainFull: QueryDef = QueryDef(
     "graph_louvain",
     louvainCtes(LouvainRounds) +
@@ -1697,20 +1677,7 @@ object GraphOps {
   val louvainCoarsen: QueryDef = QueryDef(
     "graph_louvain_coarsen",
     louvainCtes(LouvainRounds) +
-      s""",
-         |ce AS MATERIALIZED (
-         |  SELECT least(a.comm, b.comm) AS p1, greatest(a.comm, b.comm) AS p2,
-         |         CAST(sum(e.w) AS BIGINT) AS w
-         |  FROM wpairs e JOIN cm$LouvainRounds a ON a.node = e.p1
-         |       JOIN cm$LouvainRounds b ON b.node = e.p2
-         |  GROUP BY 1, 2),
-         |und2 AS MATERIALIZED (SELECT p1 AS u, p2 AS v, w FROM ce
-         |        UNION ALL SELECT p2, p1, w FROM ce),
-         |deg2 AS MATERIALIZED (SELECT u, CAST(sum(w) AS BIGINT) AS dg FROM und2 GROUP BY u),
-         |km0 AS MATERIALIZED (SELECT u AS node, u AS comm FROM deg2)""".stripMargin +
-      (1 to CoarseRounds)
-        .map(louvainRoundCte(_, "und2", "deg2", "km", skipSelf = true))
-        .mkString +
+      louvainLevelCtes("ce", "wpairs", s"cm$LouvainRounds", "und2", "deg2", "km") +
       s"""
          |SELECT c.node AS part, k.comm AS community, s.comm_size
          |FROM cm$LouvainRounds c
@@ -1720,30 +1687,9 @@ object GraphOps {
          |      GROUP BY 1) s ON s.comm = k.comm
          |ORDER BY part""".stripMargin,
   ) { (spark, dir) =>
-    louvainCoarsenOf(minedEdges(spark, dir),
-      LouvainRounds, CoarseRounds, Some(sharedLouvainFine(spark, dir)))
-  }
-
-  /** [[louvainCoarsen]] over any canonical weighted `(p1, p2, w)` edge
-    * list — fixture seam. `fine0` = the [[sharedLouvainFine]] frame
-    * (already materialized, so it is not re-persisted). */
-  private[graft] def louvainCoarsenOf(wp: DataFrame, rounds: Int,
-      coarseRounds: Int, fine0: Option[DataFrame] = None): DataFrame = {
-    val cm = fine0.getOrElse(
-      graft.Caches.persist(louvainAssignOf(wp, rounds)))
-    val ce = wp
-      .join(cm.select($"node".as("p1"), $"comm".as("c1")), "p1")
-      .join(cm.select($"node".as("p2"), $"comm".as("c2")), "p2")
-      .select(least($"c1", $"c2").as("p1"), greatest($"c1", $"c2").as("p2"), $"w")
-      .groupBy($"p1", $"p2").agg(sum($"w").as("w"))
-    val km = louvainAssignOf(ce, coarseRounds, skipSelf = true)
-    val proj = cm.select($"node", $"comm".as("mid"))
-      .join(km.select($"node".as("mid"), $"comm".as("community")), "mid")
-    proj
-      .withColumn("comm_size",
-        count(lit(1)).over(Window.partitionBy($"community")))
-      .select($"node".as("part"), $"community", $"comm_size")
-      .orderBy($"part")
+    louvainMultilevelOf(minedEdges(spark, dir),
+      LouvainRounds, CoarseRounds, levels = 1,
+      fine0 = Some(sharedLouvainFine(spark, dir)))
   }
 
   /** Coarsening levels beyond the fine pass for [[louvainMultilevel]].
@@ -1774,34 +1720,8 @@ object GraphOps {
   val louvainMultilevel: QueryDef = QueryDef(
     "graph_louvain_multilevel",
     louvainCtes(LouvainRounds) +
-      s""",
-         |ce AS MATERIALIZED (
-         |  SELECT least(a.comm, b.comm) AS p1, greatest(a.comm, b.comm) AS p2,
-         |         CAST(sum(e.w) AS BIGINT) AS w
-         |  FROM wpairs e JOIN cm$LouvainRounds a ON a.node = e.p1
-         |       JOIN cm$LouvainRounds b ON b.node = e.p2
-         |  GROUP BY 1, 2),
-         |und2 AS MATERIALIZED (SELECT p1 AS u, p2 AS v, w FROM ce
-         |        UNION ALL SELECT p2, p1, w FROM ce),
-         |deg2 AS MATERIALIZED (SELECT u, CAST(sum(w) AS BIGINT) AS dg FROM und2 GROUP BY u),
-         |km0 AS MATERIALIZED (SELECT u AS node, u AS comm FROM deg2)""".stripMargin +
-      (1 to CoarseRounds)
-        .map(louvainRoundCte(_, "und2", "deg2", "km", skipSelf = true))
-        .mkString +
-      s""",
-         |ce2 AS MATERIALIZED (
-         |  SELECT least(a.comm, b.comm) AS p1, greatest(a.comm, b.comm) AS p2,
-         |         CAST(sum(e.w) AS BIGINT) AS w
-         |  FROM ce e JOIN km$CoarseRounds a ON a.node = e.p1
-         |       JOIN km$CoarseRounds b ON b.node = e.p2
-         |  GROUP BY 1, 2),
-         |und3 AS MATERIALIZED (SELECT p1 AS u, p2 AS v, w FROM ce2
-         |        UNION ALL SELECT p2, p1, w FROM ce2),
-         |deg3 AS MATERIALIZED (SELECT u, CAST(sum(w) AS BIGINT) AS dg FROM und3 GROUP BY u),
-         |jm0 AS MATERIALIZED (SELECT u AS node, u AS comm FROM deg3)""".stripMargin +
-      (1 to CoarseRounds)
-        .map(louvainRoundCte(_, "und3", "deg3", "jm", skipSelf = true))
-        .mkString +
+      louvainLevelCtes("ce", "wpairs", s"cm$LouvainRounds", "und2", "deg2", "km") +
+      louvainLevelCtes("ce2", "ce", s"km$CoarseRounds", "und3", "deg3", "jm") +
       s"""
          |SELECT c.node AS part, j.comm AS community, s.comm_size
          |FROM cm$LouvainRounds c
@@ -1819,10 +1739,12 @@ object GraphOps {
       Some(sharedLouvainFine(spark, dir)))
   }
 
-  /** [[louvainMultilevel]] over any canonical weighted `(p1, p2, w)` edge
-    * list — fixture seam. `levels = 1` reproduces [[louvainCoarsenOf]]
-    * exactly (the spec pins this); `fine0` = the [[sharedLouvainFine]]
-    * frame (already materialized, so it is not re-persisted). */
+  /** The one Louvain contraction loop: [[louvainMultilevel]] over any
+    * canonical weighted `(p1, p2, w)` edge list, `levels` contract-and-move
+    * steps on top of the fine pass — `levels = 1` is the
+    * [[louvainCoarsen]] lane (the former `louvainCoarsenOf`). `fine0` =
+    * the [[sharedLouvainFine]] frame (already materialized, so it is not
+    * re-persisted). */
   private[graft] def louvainMultilevelOf(wp: DataFrame, rounds: Int,
       coarseRounds: Int, levels: Int,
       fine0: Option[DataFrame] = None): DataFrame = {

@@ -46,10 +46,10 @@ object LlmTextOps {
     * `conv(substring(md5(c),1,15),16,10)` but a single fused digest read,
     * which matters because most call sites sit inside higher-order-function
     * lambdas where every sub-expression evaluates interpreted per element. */
-  private def portableHash(c: Column): Column =
+  private[graft] def portableHash(c: Column): Column =
     call_function("md5hash60", c)
 
-  private def tokens: Column = split($"text", " ")
+  private[graft] def tokens: Column = split($"text", " ")
 
   /** doc_id + distinct 3-word shingle set (docs with <3 tokens dropped —
     * they have no shingles and can never reach a Jaccard threshold). */
@@ -138,8 +138,8 @@ object LlmTextOps {
 
   // ------------------------------------------- winnowing fingerprints
 
-  private val WinK = 8 // k-gram length (chars)
-  private val WinW = 4 // winnowing window (k-grams)
+  private[graft] val WinK = 8 // k-gram length (chars)
+  private[graft] val WinW = 4 // winnowing window (k-grams)
 
   /** Winnowing (MOSS-style rolling-hash document fingerprinting): hash every
     * K-char gram, then keep the minimum hash of each W-gram sliding window —
@@ -159,29 +159,14 @@ object LlmTextOps {
     // Round-18 (§4): the gram-hash + window-min + distinct pipeline runs
     // in the native [[graft.functions.WinnowMd5Fps]] expression — one
     // fused linear pass per document with a reused MessageDigest — where
-    // the HOF tree below ([[winnowFingerprintsHof]], retained as the A/B
-    // witness) paid an interpreted md5, a substring allocation and an
-    // array re-slice per gram. Same hash, same windows, same distinct
-    // order; the oracle CTE is untouched.
+    // the HOF tree (`TextWitnesses.winnowFingerprintsHof` in the test
+    // sources, the A/B witness) paid an interpreted md5, a substring
+    // allocation and an array re-slice per gram. Same hash, same windows,
+    // same distinct order; the oracle CTE is untouched.
     Tables.documents(spark, dir)
       .filter(length($"text") >= WinK + WinW - 1)
       .select($"doc_id",
         explode(call_function("winnow_md5_fps", $"text")).as("fp"))
-
-  /** The declarative HOF form of [[winnowFingerprints]] — retained as the
-    * value-equality witness for the native expression (WinnowSpec pins
-    * native ≡ HOF row-for-row on fixtures and real documents). */
-  private[graft] def winnowFingerprintsHof(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .filter(length($"text") >= WinK + WinW - 1)
-      .select($"doc_id", $"text", (length($"text") - (WinK - 1)).as("n_grams"))
-      .select($"doc_id",
-        explode(flatten(transform(
-          array(transform(sequence(lit(1), $"n_grams"),
-            i => portableHash($"text".substr(i, lit(WinK))))),
-          hs => array_distinct(transform(
-            sequence(lit(1), size(hs) - WinW + 1),
-            p => array_min(slice(hs, p, lit(WinW)))))))).as("fp"))
 
   /** Shared oracle CTE: same grams, same window min, same completeness
     * guard, in DuckDB. */
@@ -1082,22 +1067,42 @@ object LlmTextOps {
 
   /** [[simhashPairs]]'s banded mining body (unordered), extracted so
     * [[dedupConsensus]] can fuse the same pair graph. */
-  private def simhashPairsMine(spark: SparkSession, dir: String): DataFrame = {
-    val f = simhashDf(spark, dir)
-    val bands = f.select($"doc_id", $"simhash",
-      explode(array((0 until 4).map(b => struct(
+  private def simhashPairsMine(spark: SparkSession, dir: String): DataFrame =
+    hammingPairsOf(simhashDf(spark, dir), "simhash", bits = 32, radius = 3)
+
+  /** Every `(doc_a < doc_b, hamming)` pair of a `(doc_id, <hash>)` frame
+    * whose `bits`-bit hashes differ in at most `radius` bits — the one
+    * exact pigeonhole band join behind every hamming-radius lane
+    * (`llm_simhash_pairs`, `llm_dedup_consensus`, `mm_simhash_payload`,
+    * `mm_phash_pairs`, `mm_phash_pairs2`; it replaces the four copies
+    * `simhashBandPairs`, `phashPairsOf`, `phashPairs2Of` and the body of
+    * `simhashPairsMine`, which differed only in constants). The hash
+    * splits into `radius + 1` bands of `⌈bits / bands⌉` bits; `radius`
+    * differing bits
+    * touch at most `radius` bands, so every qualifying pair agrees on at
+    * least one whole band, and the (band, value) self equi-join loses
+    * nothing. Candidates are deduplicated (a close pair may share several
+    * bands) before the exact `bit_count(xor) ≤ radius` filter. The join
+    * shuffles (band, value) keys and hashes, never the rows behind them. */
+  private[graft] def hammingPairsOf(f: DataFrame, hash: String, bits: Int,
+      radius: Int): DataFrame = {
+    val nBands = radius + 1
+    val width = (bits + nBands - 1) / nBands
+    val bands = f.select($"doc_id", col(hash).as("h"),
+      explode(array((0 until nBands).map(b => struct(
         lit(b).as("band"),
-        shiftright($"simhash", 8 * b).bitwiseAND(lit(255L)).as("v"))): _*)).as("bv"))
-      .select($"doc_id", $"simhash", $"bv.band".as("band"), $"bv.v".as("v"))
+        shiftright(col(hash), width * b).bitwiseAND(lit((1L << width) - 1)).as("v"))): _*))
+        .as("bv"))
+      .select($"doc_id", $"h", $"bv.band".as("band"), $"bv.v".as("v"))
     bands.as("a")
       .join(bands.as("b"),
         col("a.band") === col("b.band") && col("a.v") === col("b.v") &&
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.simhash").as("ha"), col("b.simhash").as("hb"))
+        col("a.h").as("ha"), col("b.h").as("hb"))
       .distinct()
       .withColumn("hamming", bit_count($"ha".bitwiseXOR($"hb")).cast("long"))
-      .filter($"hamming" <= 3)
+      .filter($"hamming" <= radius)
       .select($"doc_a", $"doc_b", $"hamming")
   }
 
@@ -1188,18 +1193,18 @@ object LlmTextOps {
     * result is deterministic and matches [[dedupCluster]]'s recursive-CTE
     * oracle. */
   private[graft] def clusterLsOf(pairs: DataFrame, docs: DataFrame): DataFrame = {
-    // canonical (a > b) orientation; self-pairs dropped. persist, not
-    // localCheckpoint: round 0 needs no lineage truncation (it is never
-    // rebuilt from a prior round), and persist lets the possibly-expensive
-    // upstream pair mining reuse cached blocks across reruns — only the
-    // per-round loop state below truncates.
-    var e = graft.Caches.persist(
+    // canonical (a > b) orientation; self-pairs dropped. The canonical
+    // pairs are persisted so a rerun over the same pair plan reuses the
+    // possibly-expensive upstream mining; their distinct is checkpointed
+    // with its count in one job, like every round below. The checkpoint
+    // runs through adaptive execution, which sizes the distinct's output
+    // from the observed bytes (one partition at bench SF); a persisted
+    // distinct keeps the session's shuffle width instead and hands it to
+    // every task of round 1.
+    var (e, nEdges) = graft.Caches.localCheckpointCount(graft.Caches.persist(
       pairs.select(greatest($"doc_a", $"doc_b").as("a"),
           least($"doc_a", $"doc_b").as("b"))
-        .filter($"a" =!= $"b").distinct())
-    var nEdges = e.count()
-    var converged = nEdges == 0L
-    var iter = 0
+        .filter($"a" =!= $"b")).distinct())
     // Round-17: every star round runs at a width sized from the MEASURED
     // edge count (a count the convergence test already pays) — at bench SF
     // the match graph is a few thousand rows and session-wide 32-task
@@ -1207,6 +1212,8 @@ object LlmTextOps {
     // (geo_cluster / dq_golden_record drift-watch lanes); at cluster
     // scale the width grows with the frame. Values are width-independent.
     val lw = loopPartsFor(pairs.sparkSession, nEdges)
+    var converged = nEdges == 0L
+    var iter = 0
     withLoopWidth(pairs.sparkSession, lw) {
     while (!converged && iter < MaxLsRounds) {
       // Each star step is ONE window over the step's grouping key instead
@@ -1626,36 +1633,14 @@ object LlmTextOps {
     // over the text bytes per document, no posexplode, no doc-partitioned
     // windows, no collect_list re-assembly, and the only shuffle left in
     // the frame is whatever the CALLER keys on. The declarative form
-    // below ([[cdcChunkFrameHofOf]]) is retained as the A/B witness;
-    // values are identical because tokens are split(text, ' ') (single-
-    // byte separator), so every window/chunk md5 hashes the exact byte
-    // slice the declarative concat_ws re-built.
+    // (`TextWitnesses.cdcChunkFrameHofOf` in the test sources) is the A/B
+    // witness; values are identical because tokens are split(text, ' ')
+    // (single-byte separator), so every window/chunk md5 hashes the exact
+    // byte slice the declarative concat_ws re-built.
     documents
       .select($"doc_id", explode(call_function("cdc_chunks", $"text")).as("c"))
       .select($"doc_id", $"c.ck".as("ck"), $"c.n_toks".as("n_toks"),
         $"c.h".as("h"))
-
-  /** The declarative window form of [[cdcChunkFrameOf]] — retained as the
-    * value-equality witness for the native expression (LlmTextOpsSpec
-    * pins native ≡ declarative row-for-row on fixtures and the real
-    * corpus). */
-  private[graft] def cdcChunkFrameHofOf(documents: DataFrame): DataFrame = {
-    val w = Window.partitionBy($"doc_id").orderBy($"i")
-    val p = documents
-      .select($"doc_id", posexplode(tokens))
-      .select($"doc_id", ($"pos" + 1).as("i"), $"col".as("tok"))
-      .withColumn("bnd", when($"i" >= 3 &&
-        pmod(portableHash(concat_ws(" ",
-          lag($"tok", 2).over(w), lag($"tok", 1).over(w), $"tok")), lit(8)) === 0,
-        1L).otherwise(0L))
-    val c = p.withColumn("ck", coalesce(
-      sum($"bnd").over(w.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-    c.groupBy($"doc_id", $"ck")
-      .agg(count(lit(1)).as("n_toks"),
-        portableHash(array_join(
-          transform(array_sort(collect_list(struct($"i", $"tok"))),
-            s => s.getField("tok")), " ")).as("h"))
-  }
 
   /** The CDC pipeline over any `(doc_id, text)` frame — extracted for the
     * insertion-robustness spec. */

@@ -456,29 +456,10 @@ object MultimodalOps {
     * digested, same sign rule, same band join — the spec pins native ≡
     * declarative per doc. */
   private[graft] def simhashPayloadOf(media: DataFrame): DataFrame =
-    simhashBandPairs(media
+    LlmTextOps.hammingPairsOf(media
       .filter(length($"payload") >= 4)
-      .select($"doc_id", call_function("simhash32", $"payload").as("simhash")))
-
-  /** Hamming ≤ 1 pair mining over a `(doc_id, simhash)` fingerprint frame
-    * — two 16-bit band equi-joins, exact by pigeonhole. */
-  private[graft] def simhashBandPairs(f: DataFrame): DataFrame = {
-    val bands = f.select($"doc_id", $"simhash",
-      explode(array((0 until 2).map(b => struct(
-        lit(b).as("band"),
-        shiftright($"simhash", 16 * b).bitwiseAND(lit(65535L)).as("v"))): _*)).as("bv"))
-      .select($"doc_id", $"simhash", $"bv.band".as("band"), $"bv.v".as("v"))
-    bands.as("a")
-      .join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.v") === col("b.v") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.simhash").as("ha"), col("b.simhash").as("hb"))
-      .distinct()
-      .withColumn("hamming", bit_count($"ha".bitwiseXOR($"hb")).cast("long"))
-      .filter($"hamming" <= 1)
-      .select($"doc_a", $"doc_b", $"hamming")
-  }
+      .select($"doc_id", call_function("simhash32", $"payload").as("simhash")),
+      "simhash", bits = 32, radius = 1)
 
   /** Quantized DCT-II basis for [[phash]]: CL[u·8+x] =
     * round(cos(π·(2x+1)·u/16)·10⁶) — the 8×8 type-II DCT cosines as ppm
@@ -601,6 +582,27 @@ object MultimodalOps {
     media.select($"doc_id", hash.as("phash"))
   }
 
+  /** Oracle of the pHash pair lanes: [[phash]]'s CTE chain, the 63-bit
+    * hash as `ph`, the lane's band CTE `bd`, then the banded self-join
+    * filtered to hamming ≤ `radius`. */
+  private def phashPairsSql(bd: String, radius: Int): String =
+    phash.oracle.get
+      .replaceFirst("(?s)\nSELECT doc_id.*$", "") +
+      """,
+        |ph AS (SELECT doc_id,
+        |              CAST(list_sum([CASE WHEN f[i + 1] * 63 > sumac THEN ([""".stripMargin +
+      (0 until 63).map(1L << _).mkString(", ") +
+      s"""])[i]
+        |                            ELSE 0 END for i in range(1, 64)]) AS BIGINT) AS phash
+        |       FROM h),
+        |$bd
+        |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
+        |       CAST(bit_count(xor(a.phash, b.phash)) AS BIGINT) AS hamming
+        |FROM bd a JOIN bd b
+        |  ON a.band = b.band AND a.v = b.v AND a.doc_id < b.doc_id
+        |WHERE bit_count(xor(a.phash, b.phash)) <= $radius
+        |ORDER BY doc_a, doc_b""".stripMargin
+
   /** Near-dup pairs under the perceptual hash: hamming ≤ 1 via the same
     * 2-band blocking as [[simhashPayload]] (a ≤1-bit difference must
     * leave one 32-bit half intact, so the band equi-join is lossless) —
@@ -609,54 +611,24 @@ object MultimodalOps {
     * payloads. */
   val phashPairs: QueryDef = QueryDef(
     "mm_phash_pairs",
-    phash.oracle.get
-      .replaceFirst("(?s)\nSELECT doc_id.*$", "") +
-      """,
-        |ph AS (SELECT doc_id,
-        |              CAST(list_sum([CASE WHEN f[i + 1] * 63 > sumac THEN ([""".stripMargin +
-      (0 until 63).map(1L << _).mkString(", ") +
-      """])[i]
-        |                            ELSE 0 END for i in range(1, 64)]) AS BIGINT) AS phash
-        |       FROM h),
-        |bd AS (SELECT doc_id, phash, b AS band,
+    phashPairsSql(
+      """bd AS (SELECT doc_id, phash, b AS band,
         |              CASE WHEN b = 0 THEN phash & 4294967295
         |                   ELSE (phash >> 32) & 4294967295 END AS v
-        |       FROM ph, unnest([0, 1]) AS t(b))
-        |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |       CAST(bit_count(xor(a.phash, b.phash)) AS BIGINT) AS hamming
-        |FROM bd a JOIN bd b
-        |  ON a.band = b.band AND a.v = b.v AND a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.phash, b.phash)) <= 1
-        |ORDER BY doc_a, doc_b""".stripMargin,
+        |       FROM ph, unnest([0, 1]) AS t(b))""".stripMargin, 1),
   ) { (spark, dir) =>
-    phashPairsOf(mediaTable(spark, dir), Some(sharedPhash(spark, dir)))
+    phashPairsOf(mediaTable(spark, dir), 1, Some(sharedPhash(spark, dir)))
       .orderBy($"doc_a", $"doc_b")
   }
 
-  /** [[phashPairs]]' mining body over any `(doc_id, payload)` frame —
-    * fixture seam. `ph0` = the [[sharedPhash]] frame. */
-  private[graft] def phashPairsOf(media: DataFrame,
-      ph0: Option[DataFrame] = None): DataFrame = {
-    val ph = ph0.getOrElse(phashOf(media))
-    val bd = ph.select($"doc_id", $"phash",
-      explode(array(
-        struct(lit(0L).as("band"),
-          $"phash".bitwiseAND(lit(4294967295L)).as("v")),
-        struct(lit(1L).as("band"),
-          shiftright($"phash", 32).bitwiseAND(lit(4294967295L)).as("v"))))
-        .as("bv"))
-      .select($"doc_id", $"phash", $"bv.band".as("band"), $"bv.v".as("v"))
-    bd.as("a")
-      .join(bd.as("b"),
-        col("a.band") === col("b.band") && col("a.v") === col("b.v") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.phash").as("ha"), col("b.phash").as("hb"))
-      .distinct()
-      .withColumn("hamming", bit_count($"ha".bitwiseXOR($"hb")).cast("long"))
-      .filter($"hamming" <= 1)
-      .select($"doc_a", $"doc_b", $"hamming")
-  }
+  /** The pHash pair mining of [[phashPairs]] (`radius` 1) and
+    * [[phashPairs2]] (`radius` 2) over any `(doc_id, payload)` frame —
+    * fixture seam; the band join is [[LlmTextOps.hammingPairsOf]] over
+    * the 63-bit hash. `ph0` = the [[sharedPhash]] frame. */
+  private[graft] def phashPairsOf(media: DataFrame, radius: Int,
+      ph0: Option[DataFrame] = None): DataFrame =
+    LlmTextOps.hammingPairsOf(ph0.getOrElse(phashOf(media)), "phash",
+      bits = 63, radius = radius)
 
   /** Hamming ≤ 2 pairs under the perceptual hash — the wider-radius
     * companion to [[phashPairs]]: 3 bands of 21 bits over the 63-bit hash,
@@ -667,50 +639,13 @@ object MultimodalOps {
     * equi-joins, hashes not payloads on the wire. */
   val phashPairs2: QueryDef = QueryDef(
     "mm_phash_pairs2",
-    phash.oracle.get
-      .replaceFirst("(?s)\nSELECT doc_id.*$", "") +
-      """,
-        |ph AS (SELECT doc_id,
-        |              CAST(list_sum([CASE WHEN f[i + 1] * 63 > sumac THEN ([""".stripMargin +
-      (0 until 63).map(1L << _).mkString(", ") +
-      """])[i]
-        |                            ELSE 0 END for i in range(1, 64)]) AS BIGINT) AS phash
-        |       FROM h),
-        |bd AS (SELECT doc_id, phash, b AS band,
+    phashPairsSql(
+      """bd AS (SELECT doc_id, phash, b AS band,
         |              (phash >> (21 * b)) & 2097151 AS v
-        |       FROM ph, unnest([0, 1, 2]) AS t(b))
-        |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |       CAST(bit_count(xor(a.phash, b.phash)) AS BIGINT) AS hamming
-        |FROM bd a JOIN bd b
-        |  ON a.band = b.band AND a.v = b.v AND a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.phash, b.phash)) <= 2
-        |ORDER BY doc_a, doc_b""".stripMargin,
+        |       FROM ph, unnest([0, 1, 2]) AS t(b))""".stripMargin, 2),
   ) { (spark, dir) =>
-    phashPairs2Of(mediaTable(spark, dir), Some(sharedPhash(spark, dir)))
+    phashPairsOf(mediaTable(spark, dir), 2, Some(sharedPhash(spark, dir)))
       .orderBy($"doc_a", $"doc_b")
-  }
-
-  /** [[phashPairs2]]' mining body over any `(doc_id, payload)` frame —
-    * fixture seam. `ph0` = the [[sharedPhash]] frame. */
-  private[graft] def phashPairs2Of(media: DataFrame,
-      ph0: Option[DataFrame] = None): DataFrame = {
-    val ph = ph0.getOrElse(phashOf(media))
-    val bd = ph.select($"doc_id", $"phash",
-      explode(array((0 until 3).map(b => struct(
-        lit(b.toLong).as("band"),
-        shiftright($"phash", 21 * b).bitwiseAND(lit(2097151L)).as("v"))): _*))
-        .as("bv"))
-      .select($"doc_id", $"phash", $"bv.band".as("band"), $"bv.v".as("v"))
-    bd.as("a")
-      .join(bd.as("b"),
-        col("a.band") === col("b.band") && col("a.v") === col("b.v") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.phash").as("ha"), col("b.phash").as("hb"))
-      .distinct()
-      .withColumn("hamming", bit_count($"ha".bitwiseXOR($"hb")).cast("long"))
-      .filter($"hamming" <= 2)
-      .select($"doc_a", $"doc_b", $"hamming")
   }
 
   // ------------------------------------ synthesized payloads: input seam

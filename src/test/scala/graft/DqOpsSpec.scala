@@ -239,7 +239,7 @@ class DqOpsSpec extends AnyFunSuite {
     def collect(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getString(3)))
     val nw = collect(DqOps.typoCandidates(cust))
-    val old = collect(DqOps.typoCandidatesIdJoin(cust))
+    val old = collect(TextWitnesses.typoCandidatesIdJoin(cust))
     // both forms are duplicate-free and identical as sets
     assert(nw.length == nw.toSet.size, "name-level form emits each pair once")
     assert(old.length == old.toSet.size, "id-level witness is distinct")

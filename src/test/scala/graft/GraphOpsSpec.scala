@@ -124,6 +124,25 @@ class GraphOpsSpec extends AnyFunSuite {
     assert(r == r2, "dangling-path pagerank must be deterministic")
   }
 
+  test("personalized pagerank: directed sink nodes are ranked, mass returns to the seeds") {
+    import spark.implicits.{localSeqToDatasetHolder, newProductEncoder}
+    // the sink chain above (1 -> 2 -> 3, 4 -> 3) seeded at the two
+    // smallest ids {1, 2}: the sink 3 collects rank, and its mass goes
+    // back along the teleport vector (to the seeds) every round, so the
+    // total stays at the seed count instead of leaking away
+    val edges = Seq((1L, 2L), (2L, 3L), (4L, 3L)).toDF("src", "dst")
+    val r = GraphOps.pageRankOf(edges, 20, Some(2)).collect()
+      .map(row => row.getLong(0) -> row.getDouble(1)).toMap
+    assert(r.keySet == Set(1L, 2L, 3L, 4L), s"sink node must be ranked: $r")
+    assert(r(3L) > 0.0, s"the sink must collect rank: $r")
+    assert(r(4L) == 0.0, s"a non-seed source is unreachable: $r")
+    assert(math.abs(r.values.sum - 2.0) < 0.01,
+      s"total mass must equal the seed count: $r")
+    val r2 = GraphOps.pageRankOf(edges, 20, Some(2)).collect()
+      .map(row => row.getLong(0) -> row.getDouble(1)).toMap
+    assert(r == r2, "dangling-path PPR must be deterministic")
+  }
+
   test("bfs levels: hop distances, visited exclusion, unreachable components") {
     import spark.implicits.{localSeqToDatasetHolder, newProductEncoder}
     // chain 1-2-3-4-5 plus a cycle edge 2-4 (shortcut) and a disconnected
@@ -519,7 +538,7 @@ class GraphOpsSpec extends AnyFunSuite {
     assert(flat.groupBy(_._2).values.map(_.keys.map(triangleOf).toSet.size)
         .forall(_ == 1) && flat.values.toSet.size == k,
       s"flat pass must fix at exactly one community per triangle: $flat")
-    val coarse = GraphOps.louvainCoarsenOf(edges, 4, 2).collect()
+    val coarse = GraphOps.louvainMultilevelOf(edges, 4, 2, 1).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     // phase 2 output must be a strict coarsening: flat communities map
     // WHOLE into coarse communities, and at least one adjacent pair merged
@@ -531,7 +550,7 @@ class GraphOpsSpec extends AnyFunSuite {
     // NOTE: merged label groups need not be ring-contiguous — a supernode
     // can adopt a neighbor's label and that neighbor move on next round
     // (standard label semantics, same as the flat phase).
-    val again = GraphOps.louvainCoarsenOf(edges, 4, 2).collect()
+    val again = GraphOps.louvainMultilevelOf(edges, 4, 2, 1).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(coarse == again, "coarsening must be deterministic")
   }
@@ -681,12 +700,25 @@ class GraphOpsSpec extends AnyFunSuite {
       clique(11L to 14L) ++ clique(15L to 18L) ++
       Seq((4L, 5L, 2L), (14L, 15L, 2L), (8L, 11L, 1L)))
       .toDF("p1", "p2", "w")
-    // one coarsening level must reproduce louvainCoarsenOf exactly
+    // one level (the graph_louvain_coarsen lane) must equal ONE explicit
+    // contract-and-move step built here from the fine assignment: sum
+    // edge weights per community pair, run the coarse rounds on that
+    // supergraph, project back, and size the communities
     val ml1 = GraphOps.louvainMultilevelOf(edges, 4, 2, 1).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val co = GraphOps.louvainCoarsenOf(edges, 4, 2).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(ml1 == co, "levels=1 must equal the single coarsen pass")
+    val fine = GraphOps.louvainAssignOf(edges, 4).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val ce = edges.collect().toSeq
+      .map(r => (fine(r.getLong(0)), fine(r.getLong(1)), r.getLong(2)))
+      .groupBy { case (a, b, _) => (math.min(a, b), math.max(a, b)) }
+      .map { case ((a, b), ws) => (a, b, ws.map(_._3).sum) }.toSeq
+      .toDF("p1", "p2", "w")
+    val km = GraphOps.louvainAssignOf(ce, 2, skipSelf = true).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val proj = fine.map { case (n, c) => n -> km(c) }
+    val sizes = proj.values.groupBy(identity).view.mapValues(_.size.toLong)
+    val co = proj.toSeq.sorted.map { case (n, c) => (n, c, sizes(c)) }
+    assert(ml1 == co, "levels=1 must equal one explicit contract-and-move step")
     // two levels: every level-1 community maps WHOLLY into one level-2
     // community (the hierarchy property), and communities only merge
     val ml2 = GraphOps.louvainMultilevelOf(edges, 4, 2, 2).collect()
@@ -887,8 +919,8 @@ class GraphOpsSpec extends AnyFunSuite {
       df.collect().map(_.toSeq).toSeq
     assert(rows(GraphOps.louvainFullOf(edges, 4, Some(fine))) ==
       rows(GraphOps.louvainFullOf(edges, 4)), "flat lane")
-    assert(rows(GraphOps.louvainCoarsenOf(edges, 4, 2, Some(fine))) ==
-      rows(GraphOps.louvainCoarsenOf(edges, 4, 2)), "coarsen lane")
+    assert(rows(GraphOps.louvainMultilevelOf(edges, 4, 2, 1, Some(fine))) ==
+      rows(GraphOps.louvainMultilevelOf(edges, 4, 2, 1)), "coarsen lane")
     assert(rows(GraphOps.louvainMultilevelOf(edges, 4, 2, 2, Some(fine))) ==
       rows(GraphOps.louvainMultilevelOf(edges, 4, 2, 2)), "multilevel lane")
     graft.Caches.release()

@@ -141,7 +141,7 @@ class LlmTextOpsSpec extends AnyFunSuite {
     // hashes the UTF-8 slice — the boundary the fixture exercises).
     val nat = LlmTextOps.winnowFingerprints(spark, sf)
       .withColumn("pos", monotonically_increasing_id())
-    val hof = LlmTextOps.winnowFingerprintsHof(spark, sf)
+    val hof = TextWitnesses.winnowFingerprintsHof(spark, sf)
       .withColumn("pos", monotonically_increasing_id())
     assert(nat.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ==
       hof.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq)
@@ -156,7 +156,7 @@ class LlmTextOpsSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val n2 = LlmTextOps.winnowFingerprints(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val h2 = LlmTextOps.winnowFingerprintsHof(spark, dir)
+    val h2 = TextWitnesses.winnowFingerprintsHof(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(n2 == h2 && n2.nonEmpty && !n2.exists(_._1 == 3L))
   }
@@ -174,7 +174,7 @@ class LlmTextOpsSpec extends AnyFunSuite {
         r.getLong(3))).sortBy(t => (t._1, t._2)).toSeq
     val real = io.Tables.documents(spark, sf).select($"doc_id", $"text")
     assert(key(LlmTextOps.cdcChunkFrameOf(real)) ==
-      key(LlmTextOps.cdcChunkFrameHofOf(real)))
+      key(TextWitnesses.cdcChunkFrameHofOf(real)))
     val docs = Seq(
       (0L, (1 to 60).map(i => s"t$i").mkString(" ")),
       (1L, "a  b   c " + (1 to 40).map(i => s"x$i").mkString(" ") + "  "),
@@ -183,7 +183,7 @@ class LlmTextOpsSpec extends AnyFunSuite {
       (4L, ""),
     ).toDF("doc_id", "text")
     val nat = key(LlmTextOps.cdcChunkFrameOf(docs))
-    assert(nat == key(LlmTextOps.cdcChunkFrameHofOf(docs)))
+    assert(nat == key(TextWitnesses.cdcChunkFrameHofOf(docs)))
     assert(nat.exists(_._1 == 4L), "empty doc must yield its one empty chunk")
   }
 

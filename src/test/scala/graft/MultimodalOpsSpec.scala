@@ -280,7 +280,7 @@ class MultimodalOpsSpec extends AnyFunSuite {
     assert(got(1L) == got(2L), "identical payloads share the pHash")
     assert(got(1L) != got(3L), "different payloads differ")
     // pairs: the identical pair surfaces at hamming 0 through the band join
-    val pairs = MultimodalOps.phashPairsOf(media).collect()
+    val pairs = MultimodalOps.phashPairsOf(media, 1).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(pairs.contains((1L, 2L, 0L)), s"dup pair missing: ${pairs.toSeq}")
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L),
@@ -295,14 +295,47 @@ class MultimodalOpsSpec extends AnyFunSuite {
       (a, ha) <- hs; (b, hb) <- hs if a < b
       d = java.lang.Long.bitCount(ha ^ hb) if d <= 2
     } yield (a, b, d.toLong)).toSet
-    val got = MultimodalOps.phashPairs2Of(media).collect()
+    val got = MultimodalOps.phashPairsOf(media, 2).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == brute,
       s"band blocking must be lossless at radius 2: missing ${(brute diff got).take(5)}, extra ${(got diff brute).take(5)}")
     // and it strictly contains the <=1 lane
-    val r1 = MultimodalOps.phashPairsOf(media).collect()
+    val r1 = MultimodalOps.phashPairsOf(media, 1).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(r1.subsetOf(got), "radius-2 pairs must contain every radius-1 pair")
+    // The one band-join kernel at every (bits, radius) a lane uses, on
+    // planted hashes: for each band boundary, variants of one base hash at
+    // distance r and r + 1 whose flipped bits straddle that boundary and
+    // then reach into as many further bands as the distance allows — at
+    // distance r exactly one band stays intact, at r + 1 none does.
+    import spark.implicits.{localSeqToDatasetHolder, newProductEncoder}
+    val rng = new scala.util.Random(7)
+    for ((bits, r) <- Seq((32, 1), (32, 3), (63, 1), (63, 2))) {
+      val nb = r + 1
+      val w = (bits + nb - 1) / nb
+      val base = rng.nextLong() & ((1L << bits) - 1)
+      val flipSets = (for {
+        k <- 1 until nb
+        straddle <- Seq(Seq(k * w - 1, k * w), Seq(k * w, k * w - 1))
+        d <- Seq(r, r + 1)
+      } yield {
+        val others = (0 until nb).filterNot(b => b == k - 1 || b == k).map(_ * w)
+        (straddle ++ others).take(d).toSet
+      }).distinct
+      val planted = (base +: flipSets.map(_.foldLeft(base)((h, i) => h ^ (1L << i))))
+        .zipWithIndex.map { case (h, i) => (i.toLong, h) }
+      assert(planted.forall(_._2 >> bits == 0L))
+      val bruteP = (for {
+        (a, ha) <- planted; (b, hb) <- planted if a < b
+        d = java.lang.Long.bitCount(ha ^ hb) if d <= r
+      } yield (a, b, d.toLong)).toSet
+      val gotP = LlmTextOps.hammingPairsOf(planted.toDF("doc_id", "h"), "h", bits, r)
+        .collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSet
+      assert(gotP == bruteP, s"($bits, $r): missing ${bruteP diff gotP}, extra ${gotP diff bruteP}")
+      assert(bruteP.exists(_._3 == r.toLong), s"($bits, $r): no pair planted at distance r")
+      assert(planted.exists(p => java.lang.Long.bitCount(p._2 ^ base) == r + 1),
+        s"($bits, $r): no variant planted at distance r + 1")
+    }
   }
 
   test("PGM decode parses header fields out of the bytes; malformed -> NULLs") {

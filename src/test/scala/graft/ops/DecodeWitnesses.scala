@@ -3,8 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import MultimodalOps.{DctPpm, PgmPat, bindOnce, dctHash, evalOnce, payloadDocs,
-  simhashBandPairs}
+import MultimodalOps.{DctPpm, PgmPat, bindOnce, dctHash, evalOnce, payloadDocs}
 
 /** The higher-order-function forms `MultimodalOps`' native expressions
   * replaced, kept as A/B witnesses:
@@ -436,7 +435,7 @@ object DecodeWitnesses {
       .select($"doc_id", call_function("md5hash60", $"g").as("hv"))
       .groupBy($"doc_id").agg(sums.head, sums.tail: _*)
       .select($"doc_id", bits.as("simhash"))
-    simhashBandPairs(f)
+    LlmTextOps.hammingPairsOf(f, "simhash", bits = 32, radius = 1)
   }
 
   /** The pre-round-17 higher-order-function form of
