@@ -1,9 +1,12 @@
 package graft.io
 
+import scala.annotation.tailrec
 import scala.collection.mutable
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet testdata (`TESTDATA.md`).
@@ -28,6 +31,11 @@ import org.apache.spark.sql.types.StructType
   * keyed by the session: no DataFrame, plan, file index or row outlives the
   * call that built it.
   *
+  * Split contract: [[oneSplit]] tells an operator, from the file index the
+  * load already listed, whether a frame over one table scans as a single
+  * split — no Spark job, optimizer or planner run — so it can skip an
+  * exchange that would only re-partition one task's input.
+  *
   * Reads that bypass the seam, on purpose:
   *  - `rds_decimal_stored` re-reads the table it has just written with plain
   *    inference, because the lane asserts the type parquet stored;
@@ -51,6 +59,33 @@ object Tables {
         })
         df
     }
+  }
+
+  /** True only when `df` provably scans as ONE split at any session width:
+    * its analyzed plan is projects and filters over one file-source
+    * relation (the seam's parquet reads; no bucketing) holding exactly one
+    * file of at most
+    * `min(spark.sql.files.openCostInBytes, spark.sql.files.maxPartitionBytes)`
+    * bytes. Spark's split size is never below that bound, so such a file
+    * is one scan partition, and the narrow operators above keep it one.
+    * Reads only the relation's file index (listed when the frame was
+    * built): no job, no optimizer run, no physical planning. Anything else
+    * — a join, an aggregate, a local or RDD relation — is `false`. */
+  def oneSplit(df: DataFrame): Boolean = {
+    val conf = df.queryExecution.sparkSession.sessionState.conf
+    val limit = math.min(conf.filesOpenCostInBytes, conf.filesMaxPartitionBytes)
+    @tailrec def scan(p: LogicalPlan): Boolean = p match {
+      case Project(_, child) => scan(child)
+      case Filter(_, child) => scan(child)
+      case r: LogicalRelation => r.relation match {
+        case fs: HadoopFsRelation =>
+          fs.bucketSpec.isEmpty && fs.location.inputFiles.length == 1 &&
+            fs.location.sizeInBytes <= limit
+        case _ => false
+      }
+      case _ => false
+    }
+    scan(df.queryExecution.analyzed)
   }
 
   private type Stamp = (Seq[(String, String)], Seq[(String, Long, Long)])

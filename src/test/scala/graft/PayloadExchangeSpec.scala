@@ -1,20 +1,47 @@
 package graft
 
+import java.nio.file.{Files, Path => JPath}
+import java.util.Comparator
+
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, Exchange, ShuffleExchangeLike}
+import org.apache.spark.sql.functions.col
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Plan pin for the lanes built on `MultimodalOps`' synthesized payloads
-  * (PGM, WAV, RLE, Huffman, LZ): their one shuffle is the range exchange of
-  * the narrow `(doc_id, text)` input under the payload build, so the range
-  * partitioner samples the scan, the payload is built and decoded once, and
-  * the final `ORDER BY doc_id` sorts locally. Plans only these seven lanes,
-  * not the whole registry.
+import graft.io.Tables
+
+/** Plan pins for the lanes built on `MultimodalOps`' synthesized payloads
+  * (PGM, WAV, RLE, Huffman, LZ), one per input shape of `payloadDocs`:
+  *  - a corpus of several files keeps its one shuffle, the range exchange
+  *    of the narrow `(doc_id, text)` input under the payload build, so the
+  *    range partitioner samples the scan, the payload is built and decoded
+  *    once, and the final `ORDER BY doc_id` sorts locally;
+  *  - a one-split corpus (the sf0.001 file) plans no shuffle at all, and
+  *    returns the same rows as the multi-file corpus.
+  * Plans only these seven lanes, not the whole registry.
   */
-class PayloadExchangeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
+class PayloadExchangeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper
+    with BeforeAndAfterAll {
   private lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
+
+  private lazy val root: JPath = Files.createTempDirectory("graft-payload-spec")
+
+  /** The sf0.001 documents rewritten as 2 parquet files: the same rows, no
+    * longer one split. */
+  private lazy val wide: String = {
+    Tables.documents(spark, sf).repartitionByRange(2, col("doc_id"))
+      .write.parquet(s"$root/documents.parquet")
+    root.toString
+  }
+
+  override def afterAll(): Unit = {
+    Files.walk(root).sorted(Comparator.reverseOrder[JPath]())
+      .forEach(p => Files.delete(p))
+    super.afterAll()
+  }
 
   private val lanes = Seq("mm_rle_decode", "mm_huffman_decode", "mm_lz_decode",
     "mm_pgm_decode", "mm_phash_pgm", "mm_wav_energy", "mm_wav_zcr")
@@ -23,8 +50,10 @@ class PayloadExchangeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     "mm_huffman_decode" -> "huff_payload", "mm_lz_decode" -> "lz_payload")
 
   test("payload lanes shuffle the document text once, by doc_id range, below the payload build") {
+    assert(Tables.documents(spark, wide).inputFiles.length == 2)
+    assert(!Tables.oneSplit(Tables.documents(spark, wide)))
     lanes.foreach { n =>
-      val plan = SparkEntry.queries(n)(spark, sf).queryExecution.executedPlan
+      val plan = SparkEntry.queries(n)(spark, wide).queryExecution.executedPlan
       val shuffles = collect(plan) { case e: ShuffleExchangeLike => e }
       assert(shuffles.size == 1,
         s"$n plans ${shuffles.size} shuffle exchanges, want 1:\n$plan")
@@ -56,6 +85,31 @@ class PayloadExchangeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         s"$n broadcasts more than the token divisor:\n$plan")
       assert(!plan.toString.contains("SinglePartition"),
         s"$n plans a single-partition exchange:\n$plan")
+    }
+  }
+
+  test("payload lanes over a one-split corpus plan no shuffle and return the multi-file rows") {
+    assert(Tables.oneSplit(Tables.documents(spark, sf)))
+    lanes.foreach { n =>
+      val df = SparkEntry.queries(n)(spark, sf)
+      val plan = df.queryExecution.executedPlan
+      val shuffles = collect(plan) { case e: ShuffleExchangeLike => e }
+      assert(shuffles.isEmpty,
+        s"$n plans ${shuffles.size} shuffle exchanges, want 0:\n$plan")
+      // the RLE/Huffman/LZ token-divisor broadcast is the only exchange
+      val exchanges = collect(plan) { case e: Exchange => e }
+      if (builder.contains(n)) {
+        assert(exchanges.size == 1 && (exchanges.head match {
+          case b: BroadcastExchangeLike => b.output.map(_.name) == Seq("q")
+          case _ => false
+        }), s"$n plans more than the token-divisor broadcast:\n$plan")
+      } else assert(exchanges.isEmpty, s"$n plans an exchange:\n$plan")
+      builder.get(n).foreach(b => assert(plan.toString.contains(b),
+        s"$n does not build its payload with $b:\n$plan"))
+      val rows = df.collect().toSeq
+      assert(rows.nonEmpty, s"$n returned no rows")
+      assert(rows == SparkEntry.queries(n)(spark, wide).collect().toSeq,
+        s"$n returns different rows over the one-split and multi-file corpus")
     }
   }
 }

@@ -20,7 +20,10 @@ import graft.io.Tables
 /** The scan seam's schema contract: a table's schema is inferred once per
   * (session, path, file listing) and later loads run no Spark job; a table
   * rewritten at the same path is re-inferred; `events.ts` normalization
-  * still holds for both parquet encodings. Fixtures are written here. */
+  * still holds for both parquet encodings. The split contract:
+  * `Tables.oneSplit` is true only for narrow operators over one small
+  * parquet file, and decides without a Spark job. Fixtures are written
+  * here. */
 class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = SparkTestSession.spark
   private lazy val root: JPath = Files.createTempDirectory("graft-tables-spec")
@@ -129,5 +132,60 @@ class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(tsOf(dir) == expected, s"$dir: first load")
       assert(tsOf(dir) == expected, s"$dir: second load")
     }
+  }
+
+  /** A 200-row `(doc_id, text)` table written as one parquet file, and
+    * the directory holding it. */
+  private lazy val oneFileDir: String = {
+    import spark.implicits._
+    val dir = root.resolve("one-file").toString
+    (1L to 200L).map(i => (i, s"text of document $i")).toDF("doc_id", "text")
+      .coalesce(1).write.parquet(s"$dir/docs.parquet")
+    dir
+  }
+
+  test("oneSplit: narrow operators over one small parquet file, decided without a Spark job") {
+    import org.apache.spark.sql.functions.{col, length}
+    val docs = Tables.load(spark, oneFileDir, "docs")
+    val narrow = docs.filter(length(col("text")) > 0).select(col("doc_id"), col("text"))
+    assert(Tables.oneSplit(docs), "a one-file table is one split")
+    val (one, jobs) = jobsDuring(Tables.oneSplit(narrow))
+    assert(one, "a filter and a project keep the one split")
+    assert(jobs == 0, s"oneSplit ran $jobs Spark jobs")
+    // the planner agrees: one scan partition
+    assert(narrow.rdd.getNumPartitions == 1)
+  }
+
+  test("oneSplit is false for two files, a file above the split bound, local rows, joins and aggregates") {
+    import org.apache.spark.sql.functions.{col, count, lit}
+    val docs = Tables.load(spark, oneFileDir, "docs")
+
+    val dir = root.resolve("two-files").toString
+    docs.repartition(2).write.parquet(s"$dir/docs.parquet")
+    val two = Tables.load(spark, dir, "docs")
+    assert(two.inputFiles.length == 2)
+    assert(!Tables.oneSplit(two), "the same rows as 2 files are not one split")
+
+    val size = Files.list(root.resolve("one-file/docs.parquet"))
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+      .mapToLong(p => Files.size(p)).sum
+    Seq("spark.sql.files.openCostInBytes", "spark.sql.files.maxPartitionBytes").foreach { k =>
+      val scoped = spark.newSession()
+      scoped.conf.set(k, (size - 1).toString)
+      assert(!Tables.oneSplit(Tables.load(scoped, oneFileDir, "docs")),
+        s"a ${size}-byte file is not provably one split under $k = ${size - 1}")
+      scoped.conf.set(k, size.toString)
+      assert(Tables.oneSplit(Tables.load(scoped, oneFileDir, "docs")), s"$k = $size")
+    }
+
+    import spark.implicits._
+    assert(!Tables.oneSplit(Seq((1L, "a")).toDF("doc_id", "text")),
+      "a createDataFrame fixture has no file index")
+    val other = docs.select(col("doc_id").as("id"))
+    assert(Tables.oneSplit(other))
+    assert(!Tables.oneSplit(docs.join(other, col("doc_id") === col("id"))),
+      "a join is not narrow")
+    assert(!Tables.oneSplit(docs.groupBy(col("doc_id")).agg(count(lit(1)))),
+      "an aggregate is not narrow")
   }
 }
